@@ -2392,11 +2392,9 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
     val (meta, wins) = spanIndexWindows(column)
     val rows = select(Nil, lit(true), internalRowId = true)
     // dedupSpansFromWins consumes `wins` twice (winner aggregate + cut
-    // join) — the same materialize pin dedupSpansKeepFirst applies, so the
-    // uncovered files' window-hash pass and the index scan run once by
-    // contract, not by exchange-reuse luck
+    // join): the same offload pin dedupSpansKeepFirst applies
     graft.llm.Dedup.dedupSpansFromWins(rows, RowIdColumn, column,
-      graft.llm.Dedup.materializeIfLarge(
+      graft.llm.Pin.offload(
         wins.select(col(RowIdColumn), col("wp").as("_wp"),
           col("h1").as("_wh"), col("h2").as("_wh2"))), meta.k)
   }

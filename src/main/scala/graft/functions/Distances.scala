@@ -265,7 +265,8 @@ object Distances {
     import org.apache.spark.sql.functions._
     val checkedId = when(id >= 0L && id < IdSlot, id)
       .otherwise(raise_error(concat(
-        lit("packDistId: id out of [0, 2^31): "), id.cast("string"))))
+        lit("packDistId: id out of [0, 2^31): "),
+        coalesce(id.cast("string"), lit("NULL")))))
     sortBits(d).cast(org.apache.spark.sql.types.DecimalType(38, 0)) *
       lit(IdSlot) + checkedId
   }
@@ -299,7 +300,8 @@ object Distances {
     import org.apache.spark.sql.functions._
     val checkedId = when(id >= -IdHalf && id < IdHalf, id + lit(IdHalf))
       .otherwise(raise_error(concat(
-        lit("packScoreId: id out of [-2^61, 2^61): "), id.cast("string"))))
+        lit("packScoreId: id out of [-2^61, 2^61): "),
+        coalesce(id.cast("string"), lit("NULL")))))
     val keyBits = when(d.isNull, lit(Long.MinValue)).otherwise(totalOrderBits(d))
     keyBits.cast(org.apache.spark.sql.types.DecimalType(38, 0)) *
       lit(IdSlot62) + checkedId

@@ -577,34 +577,12 @@ object Curation {
       (d, c) => d.drop(s"__o_$c"))
   }
 
-  /** Pin the keyed input that BOTH the per-bucket rank window and the
-    * bucket-offset aggregate consume — conf-gated on the existing
-    * `spark.graft.materialize.thresholdBytes` knob (default 256 MB), but in
-    * the OPPOSITE direction from [[Dedup.materializeIfLarge]]: here the pin
-    * is taken when the frame is UNDER the threshold. Rationale: without a
-    * pin the whole keyed lineage (base scan + md5 key derivation) evaluates
-    * TWICE — once for the window, once for the offsets aggregate (the
-    * r14-audited shard_export plan scans lineitem twice for exactly this
-    * reason); a bounded localCheckpoint makes it ONCE at the cost of
-    * executor-local blocks no wider than the frame the window must shuffle
-    * anyway. ABOVE the threshold (the 100 TB shape) the offsets aggregate's
-    * recompute reads a column-pruned (partCols, keyCol) projection — far
-    * cheaper than writing and re-reading a corpus-wide full-width
-    * checkpoint — so the documented no-materialize trade stays. Plan-time
-    * statistics only; no job is run. */
-  private def pinRankInputIfSmall(df: DataFrame): DataFrame = {
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val threshold = df.sparkSession.conf
-      .get("spark.graft.materialize.thresholdBytes", (256L << 20).toString)
-      .toLong
-    if (bytes < BigInt(threshold)) df.localCheckpoint(eager = false) else df
-  }
-
   def scalableRank(df: DataFrame, partCols: Seq[String], keyCol: String,
                    tieCol: String, hexPrefix: Int = 3): DataFrame = {
     require(hexPrefix >= 1 && hexPrefix <= 8, "hexPrefix in [1,8]")
     val bkt = conv(substring(col(keyCol), 1, hexPrefix), 16, 10).cast("long")
-    val withB = pinRankInputIfSmall(df.withColumn("_rbkt", bkt))
+    // the rank window and the offsets aggregate both consume the keyed input
+    val withB = Pin.reuse(df.withColumn("_rbkt", bkt))
     val pcols = partCols.map(col)
     val wLocal = Window.partitionBy((pcols :+ col("_rbkt")): _*)
       .orderBy(col(keyCol).asc, col(tieCol).asc)
@@ -671,8 +649,8 @@ object Curation {
                         hexPrefix: Int = 3): DataFrame = {
     require(hexPrefix >= 1 && hexPrefix <= 8, "hexPrefix in [1,8]")
     val bkt = conv(substring(col(keyCol), 1, hexPrefix), 16, 10).cast("long")
-    // same two-consumer shape as scalableRank: pin the keyed input once
-    val withB = pinRankInputIfSmall(df.withColumn("_rbkt", bkt)
+    // same two-consumer shape as scalableRank
+    val withB = Pin.reuse(df.withColumn("_rbkt", bkt)
       .withColumn("_w", col(weightCol).cast("long")))
     val pcols = partCols.map(col)
     val wLocal = Window.partitionBy((pcols :+ col("_rbkt")): _*)
@@ -876,12 +854,10 @@ object Curation {
   def packTokenSequences(df: DataFrame, idCol: String, tokensCol: String,
                          seqLen: Int, eosId: Long): DataFrame = {
     require(seqLen > 0, "seqLen must be positive")
-    // three consumers (bounds probe, bucket offsets, window+explode) — the
-    // r14-audited token_pack plan evaluated the upstream tokenization three
-    // times over. Pin once when bounded (same knob + direction rationale as
-    // [[pinRankInputIfSmall]]); the bounds head() below materializes the
-    // lazy checkpoint as part of the action it already pays.
-    val docs = pinRankInputIfSmall(
+    // three consumers (bounds probe, bucket offsets, window+explode) would
+    // each re-run the upstream tokenization; the bounds head() below
+    // materializes the lazy pin as part of the action it already pays
+    val docs = Pin.reuse(
       df.select(col(idCol).try_cast("long").as("_did"),
         concat(col(tokensCol).cast("array<long>"),
           array(lit(eosId))).as("_t"))

@@ -24,26 +24,6 @@ import graft.functions.Distances
  */
 object Dedup {
 
-  /** Materialize a signature table that feeds multiple joins — but only when
-    * it's big enough to be worth it. `localCheckpoint` computes the
-    * signatures once and truncates lineage, at the cost of executor-LOCAL
-    * storage: blocks are not replicated, so losing an executor mid-job fails
-    * the query instead of recomputing (acceptable for batch dedup runs; the
-    * 100 TB route is the persisted signature table `Table.dedupIndex`
-    * maintains under the manifest, which survives executors AND runs).
-    * Below the size cutoff the trade inverts — recomputing a map-side
-    * signature pass 2-3× is cheaper than writing the blocks — so small
-    * inputs keep pure lineage. Plan-time statistics only; no job is run.
-    * `private[graft]` so `Table.dedupSpans` can apply the same pin to the
-    * persisted∪fresh window frame it hands [[dedupSpansFromWins]]. */
-  private[graft] def materializeIfLarge(df: DataFrame): DataFrame = {
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val threshold = df.sparkSession.conf
-      .get("spark.graft.materialize.thresholdBytes", (256L << 20).toString)
-      .toLong
-    if (bytes < BigInt(threshold)) df else df.localCheckpoint(eager = false)
-  }
-
   // NOTE (r14 optimization round): the span/line keep-first winner
   // elections below deliberately KEEP the `min(struct(id, pos, h2))`
   // SortAggregate form. A packed-key HashAggregate rewrite
@@ -135,7 +115,8 @@ object Dedup {
     require(spanTokens > 0 && stride > 0,
       "spanTokens and stride must be positive")
     val base = df.select(col(idCol), split(col(textCol), " ").as("_toks"))
-    val wins = materializeIfLarge(base
+    // `wins` feeds the duplicated-window count and the covered join
+    val wins = Pin.offload(base
       .select(col(idCol),
         posexplode(graft.functions.TextHashes.windowHashPairs(
           col("_toks"), spanTokens, stride)).as(Seq("_widx", "_hp")))
@@ -277,7 +258,7 @@ object Dedup {
     * 100 TB corpus computes signatures once, not per dedup run. */
   def minhashPairsFromSigs(sigsIn: DataFrame, k: Int, bands: Int,
                            threshold: Double): DataFrame = {
-    val sigs = materializeIfLarge(sigsIn) // reused in 3 joins
+    val sigs = Pin.offload(sigsIn) // reused in 3 joins
     minhashMatches(sigs, sigs, k, bands, threshold, samePairSet = true)
   }
 
@@ -347,7 +328,7 @@ object Dedup {
     * persisted-index path, like `minhashPairsFromSigs`. */
   def simhashPairsFromSigs(sigsIn: DataFrame, maxHamming: Int = 3): DataFrame = {
     val chunks = 4 // 4 × 16-bit chunks of the 64-bit signature
-    val sigs = materializeIfLarge(sigsIn)
+    val sigs = Pin.offload(sigsIn) // both sides of the chunk self-join
     val banded = sigs.select(col("id"), col("sim"),
         posexplode(array((0 until chunks).map(c =>
           call_function("shiftrightunsigned", col("sim"), lit(c * 16))
@@ -525,12 +506,8 @@ object Dedup {
     require(spanTokens > 0 && stride > 0,
       "spanTokens and stride must be positive")
     val base = df.select(col(idCol), split(col(textCol), " ").as("_toks"))
-    // materialized when big (plan-stats probe): `wins` feeds both the
-    // winner aggregate and the candidate join — without a pin, whether the
-    // fused window-hash pass (the dominant map-side cost) runs once or
-    // twice would ride on exchange reuse, an optimizer behavior, not a
-    // contract
-    val wins = materializeIfLarge(base
+    // `wins` feeds the winner aggregate and the candidate join: pin when big
+    val wins = Pin.offload(base
       .select(col(idCol),
         posexplode(graft.functions.TextHashes.windowHashPairs(
           col("_toks"), spanTokens, stride)).as(Seq("_widx", "_hp")))
@@ -933,7 +910,7 @@ object Dedup {
     * `minhashPairsFromSigs`. */
   def embeddingLshPairsFromSigs(sigsIn: DataFrame, vecs: DataFrame,
                                 threshold: Double): DataFrame = {
-    val sigs = materializeIfLarge(sigsIn)
+    val sigs = Pin.offload(sigsIn) // both sides of the banded join
     embeddingMatches(sigs, vecs, sigs, vecs, threshold, samePairSet = true)
   }
 

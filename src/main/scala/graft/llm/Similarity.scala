@@ -1,6 +1,7 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.Sample
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -113,10 +114,13 @@ object Similarity {
     // struct-min carried the payload through one evaluation. Deterministic
     // plans (the overwhelmingly common case) are untouched; a
     // nondeterministic one is pinned once here instead of returning wrong
-    // assignments.
+    // assignments. A `Sample` node counts too: its expressions are
+    // deterministic, but Bernoulli sampling depends on row order, which a
+    // shuffle upstream does not fix.
     val corpus =
-      if (corpusIn.queryExecution.analyzed
-            .find(_.expressions.exists(!_.deterministic)).isEmpty) corpusIn
+      if (corpusIn.queryExecution.analyzed.find(p =>
+            p.isInstanceOf[Sample] ||
+              p.expressions.exists(!_.deterministic)).isEmpty) corpusIn
       else corpusIn.localCheckpoint(eager = true)
     val extras = corpus.columns.toSeq.filterNot(c => c == idCol || c == vecCol)
     val best = corpus.select(col(idCol), col(vecCol))

@@ -277,8 +277,7 @@ object TextAnalysis {
     // 1.2–1.75× SLOWER at both sf0.1 and sf1 — the map-side re-tokenize it
     // saved is cheaper than materializing the token-level intermediate.)
     val tok = df.select(col(idCol), explode(tokens(col(textCol))).as("w"))
-    val tf = tok.groupBy("w").agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = false)
+    val tf = Pin.reuse(tok.groupBy("w").agg(count(lit(1)).as("c")))
     val total = tf.agg(sum(col("c")).as("corpus_tokens"))
     val scored = tok
       .join(broadcast(tf), Seq("w"))
@@ -489,14 +488,12 @@ object TextAnalysis {
     // removes both repeats for megabyte-class cache cost. (A one-pass
     // per-document restructure was measured and rejected: 1.6× slower at
     // sf0.1 — see unigramLogProb's note; same conclusion.)
-    val tfDf = df.select(col(idCol).as("id"),
+    val tfDf = Pin.reuse(df.select(col(idCol).as("id"),
         explode(tokens(col(textCol))).as("w"))
       .filter(col("w").isin(qTerms: _*))
-      .groupBy("id", "w").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(eager = false)
-    val dlDf = df.select(col(idCol).as("id"),
-        tokenCount(col(textCol)).as("dl"))
-      .localCheckpoint(eager = false)
+      .groupBy("id", "w").agg(count(lit(1)).as("tf")))
+    val dlDf = Pin.reuse(df.select(col(idCol).as("id"),
+        tokenCount(col(textCol)).as("dl")))
     bm25FromPostings(tfDf, dlDf, terms, k, k1, b)
       .withColumnRenamed("id", idCol)
   }

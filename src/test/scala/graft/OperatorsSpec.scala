@@ -11,6 +11,10 @@ import graft.scan.Pred
 /** Unit-level checks for expressions, predicate grammar, and LLM operators. */
 class OperatorsSpec extends SparkSpec {
 
+  /** Every message along an exception's cause chain. */
+  private def messages(t: Throwable): Seq[String] =
+    if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+
   // ------------------------------------------------------------- distances
 
   test("distance expressions match hand-computed values (interpreted + codegen)") {
@@ -1058,8 +1062,6 @@ class OperatorsSpec extends SparkSpec {
         pmod(col("id"), lit(2)), Seq("id", "chunk_idx"), "n_tokens", budget = 5)
         .collect()
     }
-    def messages(t: Throwable): Seq[String] =
-      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
     assert(messages(err).exists(_.contains("not a coarsening")),
       s"wrong error: ${messages(err)}")
   }
@@ -2052,14 +2054,16 @@ class OperatorsSpec extends SparkSpec {
         Distances.unpackScoreId(Distances.packScoreId(col("d"), col("id")))
           .as("u")).collect()
     ids.foreach(r => assert(r.getLong(0) == r.getLong(1), r.toString))
-    // out-of-range id fails loudly, never packs wrong
-    val err = intercept[Exception] {
-      Seq((1.0, 1L << 61)).toDF("d", "id")
-        .select(Distances.packScoreId(col("d"), col("id"))).collect()
+    // out-of-range and NULL ids fail loudly, never pack wrong
+    Seq((Option(1L << 61), "packScoreId"), (None, "NULL")).foreach {
+      case (id, want) =>
+        val err = intercept[Exception] {
+          Seq((1.0, id)).toDF("d", "id")
+            .select(Distances.packScoreId(col("d"), col("id"))).collect()
+        }
+        assert(messages(err).exists(m => m.contains("packScoreId") &&
+          m.contains(want)), messages(err))
     }
-    def messages(t: Throwable): Seq[String] =
-      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
-    assert(messages(err).exists(_.contains("packScoreId")), messages(err))
   }
 
   test("keepBestInClusters: packed election ≡ struct election, plans hash-agg") {
@@ -2107,6 +2111,18 @@ class OperatorsSpec extends SparkSpec {
       "keepBestInClusters regressed to SortAggregate")
   }
 
+  test("ivfAssign: a NULL centroid_id fails with a message naming NULL") {
+    import spark.implicits._
+    val corpus = Seq((1L, Array(0f, 1f)), (2L, Array(3f, 1f))).toDF("id", "v")
+    val centroids = Seq((Option(0L), Array(0f, 0f)), (None, Array(3f, 0f)))
+      .toDF("centroid_id", "c_vec")
+    val err = intercept[Exception] {
+      Similarity.ivfAssign(corpus, "id", "v", centroids).collect()
+    }
+    assert(messages(err).exists(m => m.contains("packDistId") &&
+      m.contains("NULL")), messages(err))
+  }
+
   test("unigramLogProb/bm25Search r15 single-pass shapes match legacy values") {
     import spark.implicits._
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
@@ -2141,27 +2157,30 @@ class OperatorsSpec extends SparkSpec {
     assert(gotB == wantB, s"bm25Search diverged:\n$gotB\n$wantB")
   }
 
-  test("scalableRank/packTokenSequences: pinned and unpinned shapes agree") {
+  test("scalableRank/packTokenSequences match inline references") {
     import spark.implicits._
-    val key = "spark.graft.materialize.thresholdBytes"
     val docs = (0L until 500L).map(i =>
       (i, s"tok${i % 7} tok${i % 13} tok$i end")).toDF("doc_id", "text")
       .withColumn("_sk", md5(concat_ws(":", lit("s"), $"doc_id")))
-    val tokIds = docs.select($"doc_id",
-      transform(split($"text", " "), w => xxhash64(w)).as("ids"))
-    def ranks() = graft.llm.Curation.scalableRank(docs, Seq.empty, "_sk", "doc_id")
+    val ranks = graft.llm.Curation.scalableRank(docs, Seq.empty, "_sk", "doc_id")
       .select($"doc_id", $"_rank").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    def packs() = graft.llm.Curation.packTokenSequences(
+    val wantRanks = docs.select($"doc_id", (row_number().over(
+        org.apache.spark.sql.expressions.Window.orderBy($"_sk", $"doc_id"))
+        .cast("long") - 1L).as("_rank")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(ranks == wantRanks, "scalableRank diverged from the global row_number")
+    // packing: the id stream in doc_id order, each document closed by EOS,
+    // cut into consecutive 64-id sequences
+    val tokIds = docs.select($"doc_id",
+      transform(split($"text", " "), w => xxhash64(w)).as("ids"))
+    val packs = graft.llm.Curation.packTokenSequences(
         tokIds, "doc_id", "ids", seqLen = 64, eosId = -1L)
-      .select($"seq_id", hash($"token_ids")).collect()
-      .map(r => (r.getLong(0), r.getInt(1))).toSet
-    val saved = spark.conf.getOption(key)
-    val (rPin, pPin) = (ranks(), packs()) // default: pinned at this scale
-    spark.conf.set(key, "0") // pin disabled: pure-lineage legacy shape
-    try {
-      assert(ranks() == rPin, "scalableRank: pin changed the ranks")
-      assert(packs() == pPin, "packTokenSequences: pin changed the packs")
-    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toMap
+    val stream = tokIds.orderBy($"doc_id").collect()
+      .flatMap(r => r.getSeq[Long](1) :+ -1L).toSeq
+    val wantPacks = stream.grouped(64).zipWithIndex
+      .map { case (ids, i) => (i.toLong, ids) }.toMap
+    assert(packs == wantPacks, "packTokenSequences diverged from the reference chunking")
   }
 }
