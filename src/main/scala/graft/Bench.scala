@@ -589,28 +589,39 @@ object Bench {
     // runs; the filter applies to measurement only)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
+    // fails closed: an entry that throws gets no time (a throw after 10 ms
+    // would otherwise read as a big speedup); it is listed under "failed"
+    // and Bench exits non-zero after printing the JSON
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     val results = (queries ++ probeScans ++ sortedScans ++ zScans ++ sqlScans ++
         rollupScans ++ spjScans)
         .filter { case (name, _) => only.forall(_.exists(name.contains)) }
-        .map { case (name, fn) =>
-      def once(): Double = {
+        .flatMap { case (name, fn) =>
+      def once(): Option[Double] = {
         currentQuery = Some(name); matSeq.set(0)
         val t0 = System.nanoTime()
-        try fn() catch { case e: Throwable =>
+        try { fn(); Some((System.nanoTime() - t0) / 1e9) }
+        catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
-        currentQuery = None
-        (System.nanoTime() - t0) / 1e9
+          None
+        } finally currentQuery = None
       }
-      var times = (1 to 3).map(_ => once())
-      if (times.min < 2.0) times = times ++ (1 to 2).map(_ => once())
-      val dt = times.min
-      val sorted = times.sorted
-      val med =
-        if (sorted.size % 2 == 1) sorted(sorted.size / 2)
-        else (sorted(sorted.size / 2 - 1) + sorted(sorted.size / 2)) / 2.0
-      System.err.println(f"[bench] $name: $dt%.2fs (runs: ${times.map(t => f"$t%.2f").mkString(",")})")
-      (name, dt, med)
+      // n timed runs, stopping at the first failure
+      def runs(n: Int): Option[Seq[Double]] = {
+        val ts = Iterator.fill(n)(once()).takeWhile(_.isDefined).flatten.toSeq
+        if (ts.size == n) Some(ts) else None
+      }
+      runs(3).flatMap(t => if (t.min < 2.0) runs(2).map(t ++ _) else Some(t)) match {
+        case None => failed += name; None
+        case Some(times) =>
+          val dt = times.min
+          val sorted = times.sorted
+          val med =
+            if (sorted.size % 2 == 1) sorted(sorted.size / 2)
+            else (sorted(sorted.size / 2 - 1) + sorted(sorted.size / 2)) / 2.0
+          System.err.println(f"[bench] $name: $dt%.2fs (runs: ${times.map(t => f"$t%.2f").mkString(",")})")
+          Some((name, dt, med))
+      }
     }
     // calibration at END too (additions-only, r15): a mid-run ambient
     // contention event moves the medians and the end-probe while the start
@@ -629,7 +640,7 @@ object Bench {
     // flag them so their numbers are never mistaken for measurements
     val capture = explainDir.isDefined
     val json =
-      f"""{"metric":"total","value":$total%.4f,"unit":"sec","queries":$qs,"sf":"$sfDir","calibration":$calibration%.4f,"calibration_end":$calibrationEnd%.4f,"queries_median":$qsMed,"explain_capture":$capture,"contention":$cont}"""
+      f"""{"metric":"total","value":$total%.4f,"unit":"sec","queries":$qs,"sf":"$sfDir","calibration":$calibration%.4f,"calibration_end":$calibrationEnd%.4f,"queries_median":$qsMed,"explain_capture":$capture,"contention":$cont,"failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
     // stop Spark BEFORE emitting the JSON line: shutdown logging would
     // otherwise land after it in a merged stdout/stderr capture, so a
     // harness that parses the LAST line would read a log line instead of
@@ -654,6 +665,10 @@ object Bench {
       // makes Paths.get throw InvalidPathException (a RuntimeException),
       // which must not crash the run after the result is already printed
       System.err.println(s"[bench] result file write failed: ${e.getMessage}")
+    }
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} failed: ${failed.mkString(", ")}")
+      sys.exit(1)
     }
   }
 }

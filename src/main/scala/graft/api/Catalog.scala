@@ -463,8 +463,10 @@ class Transaction(val session: VastSession, val id: Long) {
   /** Two-phase commit: phase 1 re-validates every staged rename against
     * current disk state (a concurrent commit may have created a destination
     * since staging) and CAS-writes every staged manifest (no pointers move);
-    * a Conflict on ANY step deletes the manifests already written in this
-    * commit and rolls the whole transaction back — no partial commit.
+    * a failure of ANY step (a Conflict, an I/O error) deletes the manifests
+    * already written in this commit, rolls the whole transaction back and
+    * rethrows — no partial commit, and no orphan `v{N+1}` left above
+    * CURRENT to fail every later commit of that table with a Conflict.
     * Phase 2 (validated, cannot conflict) advances CURRENT pointers, reveals
     * tables created here, applies staged renames, and performs drops; a
     * rename that still fails there (a true mid-phase-2 race) is a HARD error
@@ -510,11 +512,13 @@ class Transaction(val session: VastSession, val id: Long) {
         written += ((tableDir, next))
       }
     } catch {
-      case e: Conflict =>
+      case e: Throwable =>
         written.foreach { case (tdir, next) =>
-          Files.deleteIfExists(tdir.resolve("_manifest").resolve(f"v$next%08d.json"))
+          try Files.deleteIfExists(tdir.resolve("_manifest").resolve(f"v$next%08d.json"))
+          catch { case c: Exception => e.addSuppressed(c) }
         }
-        rollback() // still active: removes staged data files + created tables
+        // still active: removes staged data files + created tables
+        try rollback() catch { case c: Exception => e.addSuppressed(c) }
         throw e
     }
     active = false

@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftglue.Glue
+import org.apache.spark.sql.graftglue.{Glue, StatsWrite}
 import org.apache.spark.sql.types._
 
 import graft.api.Manifest._
@@ -329,17 +329,13 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
       s.substring(0, cut)
     }
 
-  /** Write a DataFrame (logical schema + `_row_id`) as immutable data files;
-    * returns manifest entries with per-file row-id ranges and zone maps for
-    * EVERY primitive column (one columnar stats pass — the same aggregation
-    * regardless of column count), so `pruneByZoneMaps` serves ad-hoc
-    * predicates on unsorted columns, not just the sorting keys. */
   /** Route a batch into the declared hash-bucket layout, when one exists
     * and the batch carries the keys: the BATCH (never the table) shuffles
     * into one partition per bucket — so appends and COW rewrites keep the
     * layout live and storage-partitioned joins never degrade under normal
-    * DML. The per-file bucket id is re-derived by the stats job like every
-    * bucket write ([[optimizeBuckets]]). Identity for unbucketed tables. */
+    * DML. The per-file bucket id is re-derived from the written rows like
+    * every bucket write ([[optimizeBuckets]]). Identity for unbucketed
+    * tables. */
   private def bucketized(df: DataFrame,
                          m: TableManifest): (DataFrame, Option[Column]) =
     if (m.bucketKeys.nonEmpty && m.bucketCount > 0 &&
@@ -349,24 +345,54 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
         Some(pmod(hash(kc: _*), lit(m.bucketCount))))
     } else (df, None)
 
+  /** Write a DataFrame (logical schema + `_row_id`) as immutable data files;
+    * returns manifest entries with per-file row-id ranges and zone maps for
+    * EVERY primitive column, so `pruneByZoneMaps` serves ad-hoc predicates
+    * on unsorted columns, not just the sorting keys. The entries are
+    * computed inside the write tasks ([[StatsWrite]]) from the same
+    * aggregates [[statsEntries]] runs over a read-back: no job reads the
+    * written files again. */
   private def writeData(df: DataFrame, sorted: Boolean,
                         bucketOf: Option[Column] = None): Seq[FileEntry] = {
     val batch = dataDir.resolve("b-" + UUID.randomUUID().toString.take(8))
-    df.write.parquet(batch.toString)
-    statsEntries(batch, df.schema, sorted, bucketOf)
+    val zoneCols = zoneColumns(df.schema)
+    StatsWrite.parquet(df, batch.toString, statAggs(df.schema, zoneCols, bucketOf))
+      .map { case (name, r) =>
+        fileEntry(batch.resolve(name).toString, r, zoneCols, sorted, bucketOf.isDefined)
+      }
   }
 
-  /** Manifest entries for an already-written parquet dir: per-file row
-    * counts, row-id ranges, and zone maps in one columnar stats pass. Also
-    * serves dirs staged by Spark's own distributed write (SQL row-level
-    * COW via `adoptReplacement`). */
-  private[api] def statsEntries(batch: Path, schema: StructType,
+  /** Manifest entries for an already-written parquet dir, from one columnar
+    * stats pass over a read-back: the SQL row-level COW's files
+    * (`adoptReplacement`), which Spark's own distributed write staged. */
+  private[graft] def statsEntries(batch: Path, schema: StructType,
                                 sorted: Boolean,
                                 bucketOf: Option[Column] = None): Seq[FileEntry] = {
-    val zoneCols: Seq[(String, String)] = schema.fields.toSeq
-      .filter(_.name != RowIdColumn) // row-id range is tracked as lo/hi already
+    val zoneCols = zoneColumns(schema)
+    val aggs = statAggs(schema, zoneCols, bucketOf)
+    // schema-pinned read: an EMPTY batch writes no part files and unpinned
+    // inference would throw instead of yielding zero entries
+    spark.read.schema(schema).parquet(batch.toString)
+      .groupBy(input_file_name().as("f")).agg(aggs.head, aggs.tail: _*)
+      .collect().toSeq.map { r =>
+        val path = r.getString(0).stripPrefix("file://").stripPrefix("file:")
+        fileEntry(path, r, zoneCols, sorted, bucketOf.isDefined)
+      }
+  }
+
+  /** (column, stat kind) of every column a zone map covers; the row-id
+    * range is tracked as lo/hi already. */
+  private def zoneColumns(schema: StructType): Seq[(String, String)] =
+    schema.fields.toSeq.filter(_.name != RowIdColumn)
       .flatMap(f => statKind(f.dataType).map(kind => (f.name, kind)))
-    val zoneAggs = zoneCols.flatMap { case (k, _) =>
+
+  /** The per-file aggregates behind a manifest entry: row count, row-id
+    * range, zone-map min/max as strings, and the bucket range. */
+  private def statAggs(schema: StructType, zoneCols: Seq[(String, String)],
+                       bucketOf: Option[Column]): Seq[Column] =
+    Seq(count(lit(1)).as("rows"), min(col(RowIdColumn)).as("lo"),
+      max(col(RowIdColumn)).as("hi")) ++
+    zoneCols.flatMap { case (k, _) =>
       val c = statCol(k, schema(k).dataType)
       Seq(min(c).cast("string").as(s"__mn_$k"), max(c).cast("string").as(s"__mx_$k"))
     } ++ bucketOf.toSeq.flatMap(b =>
@@ -374,42 +400,36 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
       // min == max is asserted below, so a mis-partitioned write cannot
       // silently record a wrong bucket and corrupt shuffle-free joins
       Seq(min(b).as("__bkt_lo"), max(b).as("__bkt_hi")))
-    // schema-pinned read: an EMPTY batch writes no part files and unpinned
-    // inference would throw instead of yielding zero entries
-    val statsDf = spark.read.schema(schema).parquet(batch.toString)
-      .groupBy(input_file_name().as("f"))
-      .agg(count(lit(1)).as("rows"),
-        (Seq(min(col(RowIdColumn)).as("lo"), max(col(RowIdColumn)).as("hi"))
-          ++ zoneAggs): _*)
+
+  /** Manifest entry of one written file (absolute `path`) from its
+    * [[statAggs]] row. */
+  private def fileEntry(path: String, r: Row, zoneCols: Seq[(String, String)],
+                        sorted: Boolean, bucketed: Boolean): FileEntry = {
+    tx.newFiles += path // rollback cleanup needs the absolute path
+    // manifests store dir-relative paths so a staged rename can move the
+    // whole table dir atomically at commit without breaking entries
     val prefix = dir.toString + "/"
-    val entries = statsDf.collect().map { r =>
-      val path = r.getString(0).stripPrefix("file://").stripPrefix("file:")
-      tx.newFiles += path // rollback cleanup needs the absolute path
-      // manifests store dir-relative paths so a staged rename can move the
-      // whole table dir atomically at commit without breaking entries
-      val rel = if (path.startsWith(prefix)) path.substring(prefix.length) else path
-      val stats = zoneCols.flatMap { case (k, kind) =>
-        val mn = r.getAs[String](s"__mn_$k")
-        val mx = r.getAs[String](s"__mx_$k")
-        if (mn == null || mx == null) None
-        else if (kind == "string")
-          Some(k -> ColStat(truncStat(mn), truncStat(mx), kind,
-            maxUnbounded = mx.length > MaxStringStat))
-        else Some(k -> ColStat(mn, mx, kind))
-      }.toMap
-      val bucket = if (bucketOf.isEmpty) -1 else {
-        val lo = r.getAs[Int]("__bkt_lo"); val hi = r.getAs[Int]("__bkt_hi")
-        if (lo != hi) throw new IllegalStateException(
-          s"bucket rewrite produced a mixed file ($rel: buckets $lo..$hi) — " +
-            "hash partitioning did not align with the bucket count")
-        lo
-      }
-      FileEntry(rel, r.getAs[Long]("rows"), r.getAs[Long]("lo"),
-        r.getAs[Long]("hi"), sorted = sorted, colStats = stats,
-        bytes = try Files.size(Paths.get(path)) catch { case _: Exception => 0L },
-        bucket = bucket)
-    }.toSeq
-    entries
+    val rel = if (path.startsWith(prefix)) path.substring(prefix.length) else path
+    val stats = zoneCols.flatMap { case (k, kind) =>
+      val mn = r.getAs[String](s"__mn_$k")
+      val mx = r.getAs[String](s"__mx_$k")
+      if (mn == null || mx == null) None
+      else if (kind == "string")
+        Some(k -> ColStat(truncStat(mn), truncStat(mx), kind,
+          maxUnbounded = mx.length > MaxStringStat))
+      else Some(k -> ColStat(mn, mx, kind))
+    }.toMap
+    val bucket = if (!bucketed) -1 else {
+      val lo = r.getAs[Int]("__bkt_lo"); val hi = r.getAs[Int]("__bkt_hi")
+      if (lo != hi) throw new IllegalStateException(
+        s"bucket rewrite produced a mixed file ($rel: buckets $lo..$hi) — " +
+          "hash partitioning did not align with the bucket count")
+      lo
+    }
+    FileEntry(rel, r.getAs[Long]("rows"), r.getAs[Long]("lo"),
+      r.getAs[Long]("hi"), sorted = sorted, colStats = stats,
+      bytes = try Files.size(Paths.get(path)) catch { case _: Exception => 0L },
+      bucket = bucket)
   }
 
   /** Contiguous `_row_id` assignment from the table's high-water mark
@@ -612,8 +632,10 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
   /** Publish externally-staged parquet files as this table's new contents —
     * the commit half of the SQL row-level COW (GraftRowLevelOperation):
     * Spark's own distributed parquet write staged the replacement rows for
-    * the scanned file groups; this computes their manifest entries (stats
-    * pass), carries the UNSCANNED files over verbatim (`keepPaths`,
+    * the scanned file groups; this computes their manifest entries (a
+    * stats job over the staged files — the DSv2 write takes no stats
+    * tracker, so this is the one write path that reads its files back),
+    * carries the UNSCANNED files over verbatim (`keepPaths`,
     * manifest-relative), and CAS-publishes. `Conflict` if the manifest
     * version moved past `expectVersion` since the operation's scan pinned
     * it — the same lost-update protection as two API committers racing. */
@@ -747,21 +769,48 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
   }
 
   /** Compact small files (copy-on-write engines accrete them with every
-    * DML version): rewrites any run of files smaller than `targetRows`
-    * into full-size files, keeping `_row_id`s and big files untouched.
-    * At 100 TB this is the periodic maintenance that keeps scan task
-    * counts and footer overhead bounded. */
+    * DML version): rewrites runs of files smaller than `targetRows` into
+    * full-size files, keeping `_row_id`s and big files untouched. A run is
+    * a sequence of small files adjacent in `_row_id` order (a big file ends
+    * it), and each run is range-partitioned on `_row_id`, so compacted
+    * files cover disjoint row-id ranges and never span a big file: a
+    * narrow row-id-addressed UPDATE/DELETE then rewrites one file, not
+    * every compacted file. Bucketed tables merge all small files into the
+    * bucket layout instead. At 100 TB this is the periodic maintenance
+    * that keeps scan task counts and footer overhead bounded. */
   def compact(targetRows: Long = 4000000L): Unit = {
     val m = manifest
-    val (small, big) = m.files.partition(_.rows < targetRows)
-    if (small.size <= 1) return
-    val base = readEntries(small, m.schema)
+    val bucketedLayout = m.bucketKeys.nonEmpty && m.bucketCount > 0
+    val runs =
+      if (bucketedLayout) Seq(m.files.filter(_.rows < targetRows))
+      else m.files.sortBy(_.minRowId).foldLeft(Vector(Vector.empty[FileEntry])) {
+        case (acc, f) if f.rows >= targetRows => acc :+ Vector.empty
+        case (acc, f) => acc.init :+ (acc.last :+ f)
+      }
+    val merging = runs.filter(_.size > 1)
+    if (merging.isEmpty) return
+    val base = readEntries(merging.flatten, m.schema)
     val (bMerged, bOf) = bucketized(base, m)
-    val merged = if (bOf.isDefined) bMerged
-      else base.repartition(math.max(1, (small.map(_.rows).sum / targetRows).toInt))
+    val merged = if (bOf.isDefined) bMerged else {
+      // first row id of every output file: each run starts a new file and
+      // is cut at file boundaries into ~equal-row files
+      val starts = merging.flatMap { run =>
+        val rows = run.map(_.rows).sum
+        val n = math.max(1L, rows / targetRows)
+        val before = run.scanLeft(0L)(_ + _.rows)
+        run.indices.filter(i => i == 0 ||
+          before(i) * n / rows > before(i - 1) * n / rows).map(run(_).minRowId)
+      }.toArray
+      val outFile = udf { (id: Long) =>
+        val p = java.util.Arrays.binarySearch(starts, id)
+        if (p >= 0) p else math.max(0, -p - 2)
+      }
+      base.repartitionById(starts.length, outFile(col(RowIdColumn)))
+    }
     val entries = writeData(merged, sorted = false, bOf)
-    tx.stageWrite(dir, m.copy(files = big ++ entries))
-    recordAudit("compact", small.map(_.rows).sum)
+    val mergedPaths = merging.flatten.map(_.path).toSet
+    tx.stageWrite(dir, m.copy(files = m.files.filterNot(f => mergedPaths(f.path)) ++ entries))
+    recordAudit("compact", merging.flatten.map(_.rows).sum)
   }
 
   /** Bulk-register data files (reference server-side import,
@@ -1136,8 +1185,8 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
     * and a large bucket still splits across `nFiles / buckets` files.
     * Rows are key-sorted within each file as a bonus (tight zone maps on
     * the bucket keys for free). The per-file bucket id is re-DERIVED from
-    * the data by the stats job (min==max asserted), not trusted from the
-    * partitioning arithmetic. */
+    * the rows each write task wrote (min==max asserted), not trusted from
+    * the partitioning arithmetic. */
   def optimizeBuckets(targetFileRows: Long = 4000000L): Unit = {
     val m = manifest
     if (m.bucketKeys.isEmpty) throw NotSupportedCommand("no bucket layout")

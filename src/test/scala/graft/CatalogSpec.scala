@@ -522,6 +522,64 @@ class CatalogSpec extends SparkSpec {
     }
   }
 
+  test("compaction keeps row-id clustering: disjoint ranges, narrow update rewrites one file") {
+    val s = freshSession()
+    s.createBucket("b")
+    s.transaction { tx =>
+      val t = tx.bucket("b").createSchema("m")
+        .createTable("t", StructType(Seq(StructField("a", LongType))))
+      // a = _row_id; 4 small files, one big file, 4 more small files
+      def batch(lo: Long, n: Long) = t.insert(spark.range(lo, lo + n, 1, 1).toDF("a"))
+      (0 until 4).foreach(i => batch(i * 100L, 100L))
+      batch(400L, 500L)
+      (0 until 4).foreach(i => batch(900L + i * 100L, 100L))
+      t.compact(targetRows = 200L)
+      val files = t.manifest.files.sortBy(_.minRowId)
+      assert(files.size == 5, files.map(f => (f.minRowId, f.maxRowId, f.rows)))
+      files.sliding(2).foreach { case Seq(x, y) =>
+        assert(x.maxRowId < y.minRowId, s"overlapping files after compaction: $files")
+      }
+      assert(files.map(_.rows).sum == 1300L)
+      assert(t.select().agg(sum("a")).head().getLong(0) == (0L until 1300L).sum)
+      val before = t.manifest.files.map(_.path).toSet
+      t.updateWhere(col("a").between(250L, 260L), Map("a" -> (col("a") + 0L)))
+      assert((before -- t.manifest.files.map(_.path)).size == 1,
+        "a narrow update rewrote more than one compacted file")
+    }
+  }
+
+  test("a commit that fails on I/O leaves no orphan manifest behind") {
+    val s = freshSession()
+    s.createBucket("b")
+    s.transaction { tx =>
+      val sc = tx.bucket("b").createSchema("m")
+      sc.createTable("t1", f1Schema); sc.createTable("t2", f1Schema)
+    }
+    val tx = s.beginTransaction()
+    val t1 = tx.bucket("b").schema("m").table("t1")
+    val t2 = tx.bucket("b").schema("m").table("t2")
+    t1.insert(f1Data); t2.insert(f1Data) // t1's manifest is written first
+    // t2's manifest dir turns into a plain file: its phase-1 write fails
+    // with an I/O error, not a Conflict, after t1's manifest is written
+    val mdir = t2.dir.resolve("_manifest")
+    val aside = Files.createTempDirectory("graft-aside").resolve("_manifest")
+    Files.move(mdir, aside)
+    Files.write(mdir, Array.emptyByteArray)
+    val e = intercept[Exception](tx.commit())
+    assert(!e.isInstanceOf[Conflict], e)
+    Files.delete(mdir); Files.move(aside, mdir)
+    assert(!tx.isActive)
+    // both tables take their next commit, and the failed one left no rows
+    s.transaction { tx2 =>
+      tx2.bucket("b").schema("m").table("t1").insert(f1Data)
+      tx2.bucket("b").schema("m").table("t2").insert(f1Data)
+    }
+    s.transaction { tx3 =>
+      Seq("t1", "t2").foreach(n =>
+        assert(tx3.bucket("b").schema("m").table(n).select().count() == 3))
+    }
+  }
+
   test("csv and json import formats") {
     val s = freshSession()
     s.createBucket("b")

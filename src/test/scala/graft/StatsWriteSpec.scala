@@ -1,0 +1,140 @@
+package graft
+
+import java.nio.file.Files
+import java.sql.{Date, Timestamp}
+import java.time.LocalDateTime
+
+import org.apache.spark.graftspec.BusDrain
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.api._
+import graft.types.TypeMapping.RowIdColumn
+
+/** Manifest entries computed inside the write task must equal the ones the
+  * read-back stats pass (`statsEntries`) computes over the same files, for
+  * every zone-map kind; and an insert must not read its own output. */
+class StatsWriteSpec extends SparkSpec {
+
+  private val schema = StructType(Seq(
+    StructField("l", LongType), StructField("i", IntegerType),
+    StructField("d", DoubleType), StructField("f", FloatType),
+    StructField("s", StringType), StructField("ts", TimestampType),
+    StructField("ntz", TimestampNTZType), StructField("dt", DateType),
+    StructField("none", StringType)))
+
+  // past the 64-char stat limit: the string max (UTF-8 order) is unbounded
+  private val long = "😀" * 33 + "z"
+  private val surrogateAt64 = "y" * 63 + "😀" + "tail"
+
+  /** Rows in 3 partitions, so one insert writes 3 files, each with its own
+    * extremes: NaN and ±0.0 in the floating columns, supplementary
+    * characters and values past the 64-char stat limit in the strings. */
+  private def data(n: Int): DataFrame = {
+    val strings = Seq("a", "😀", "￿", "é", long, surrogateAt64, "")
+    val doubles = Seq(-0.0, 0.0, Double.NaN, 1.5, -2.25, Double.PositiveInfinity, 0.0)
+    val rows = (0 until n).map { k =>
+      Row(k.toLong * 7 - 50, k % 11 - 5, doubles(k % doubles.size),
+        doubles((k + 3) % doubles.size).toFloat,
+        if (k % 5 == 4) null else strings(k % strings.size),
+        new Timestamp(1700000000000L + k * 1234567L),
+        LocalDateTime.of(2024, 1 + k % 12, 1 + k % 28, k % 24, 0, 7, k * 1000),
+        Date.valueOf(s"20${10 + k % 20}-0${1 + k % 9}-1${k % 10}"),
+        null)
+    }
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+  }
+
+  private def freshTable(name: String): (VastSession, Transaction, Table) = {
+    val s = VastSession(spark, Files.createTempDirectory("graft-sw").toString)
+    s.createBucket("b")
+    s.transaction(_.bucket("b").createSchema("m").createTable(name, schema))
+    val tx = s.beginTransaction()
+    (s, tx, tx.bucket("b").schema("m").table(name))
+  }
+
+  /** Every staged file's entry against the read-back of its batch dir. */
+  private def assertParity(t: Table, bucketOf: Option[Column] = None): Unit = {
+    val written = t.manifest.files
+    assert(written.nonEmpty)
+    val withId = StructType(t.schema.fields :+
+      StructField(RowIdColumn, LongType, nullable = false))
+    val dirs = written.map(e => t.dir.resolve(e.path).getParent).distinct
+    val readBack = dirs.flatMap(d => t.statsEntries(d, withId, sorted = false, bucketOf))
+    assert(written.sortBy(_.path) == readBack.sortBy(_.path))
+  }
+
+  test("in-task entries equal read-back entries for every stat kind") {
+    val (_, tx, t) = freshTable("kinds")
+    t.insert(data(200))
+    val files = t.manifest.files
+    assert(files.size == 3, "the 3-partition batch should write 3 files")
+    // the stats the spec means to cover are actually present
+    val st = files.head.colStats
+    assert(Set("l", "i", "d", "f", "s", "ts", "ntz", "dt").subsetOf(st.keySet))
+    assert(!st.contains("none"), "an all-null column has no zone map")
+    assert(files.exists(_.colStats("d").max == "NaN"))
+    assert(files.exists(_.colStats("s").maxUnbounded))
+    assertParity(t)
+    tx.rollback()
+  }
+
+  test("parity on a bucketed write and under maxRecordsPerFile") {
+    val (s, tx0, _) = freshTable("bk")
+    tx0.rollback()
+    s.transaction(_.bucket("b").schema("m").table("bk").addBucketLayout(4, Seq("i")))
+    val btx = s.beginTransaction()
+    val bt = btx.bucket("b").schema("m").table("bk")
+    bt.insert(data(120))
+    assert(bt.manifest.files.forall(_.bucket >= 0))
+    assertParity(bt, Some(pmod(hash(col("i")), lit(4))))
+    btx.rollback()
+    val (_, tx, t) = freshTable("capped")
+    val key = "spark.sql.files.maxRecordsPerFile"
+    spark.conf.set(key, "100")
+    try t.insert(data(700)) finally spark.conf.unset(key)
+    val files = t.manifest.files
+    assert(files.forall(_.rows <= 100) && files.size >= 7 && files.map(_.rows).sum == 700)
+    assertParity(t)
+    tx.rollback()
+  }
+
+  test("a 0-row insert stages nothing; a 0-row overwrite truncates") {
+    val (s, tx, t) = freshTable("empty")
+    t.insert(data(20))
+    tx.commit()
+    def version: Long = s.transaction(_.bucket("b").schema("m").table("empty").manifest.version)
+    val v = version
+    s.transaction { tx2 =>
+      val t2 = tx2.bucket("b").schema("m").table("empty")
+      assert(t2.insert(data(0)) == ((20L, 20L)))
+      assert(t2.manifest.files.size == 3 && t2.manifest.version == v)
+    }
+    assert(version == v, "a 0-row insert committed a new version")
+    s.transaction(_.bucket("b").schema("m").table("empty").overwrite(data(0)))
+    s.transaction { tx3 =>
+      val t3 = tx3.bucket("b").schema("m").table("empty")
+      assert(t3.manifest.version == v + 1 && t3.manifest.files.isEmpty)
+      assert(t3.select().count() == 0 && t3.manifest.nextRowId == 20L)
+    }
+  }
+
+  test("an insert runs no job reading its own output") {
+    val (_, tx, t) = freshTable("jobs")
+    val sc = spark.sparkContext
+    def jobsOf(group: String)(f: => Unit): Int = {
+      sc.setJobGroup(group, group)
+      try f finally sc.clearJobGroup()
+      BusDrain(sc)
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    val batch = data(200)
+    // the row-id offsets of a multi-partition batch (zipWithIndex) and the write
+    assert(jobsOf("sw-insert")(t.insert(batch)) == 2)
+    // explicit row ids: the write alone
+    val withIds = batch.withColumn(RowIdColumn, col("l") + 1000L)
+    assert(jobsOf("sw-insert-ids")(t.insert(withIds)) == 1)
+    tx.rollback()
+  }
+}
