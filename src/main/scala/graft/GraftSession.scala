@@ -13,6 +13,17 @@ import org.apache.spark.sql.SparkSession
  * dimension tables broadcast automatically.
  */
 object GraftSession {
+  /** Entries in Spark's JVM-wide cache of Janino-compiled classes
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). One corpus
+    * curation pass needs ~360 distinct generated classes, so at 100 the LRU
+    * evicted each class before the next pass reused it and every pass
+    * recompiled nearly all of them inside executor tasks. 2048 holds about
+    * five passes, with room left for the literal-specialised classes that
+    * catalog work in the same JVM keeps adding. Static: `CodeGenerator`
+    * reads it once per JVM, on the first codegen, so only a builder conf
+    * takes effect and the first session of the JVM decides. */
+  val CodegenCacheEntries = 2048
+
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
     tune(SparkSession.builder().master(s"local[$cores]"), cores).getOrCreate()
 
@@ -34,6 +45,9 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.sql.parquet.aggregatePushdown", "true")
+      // 100 entries against a ~360-class curation pass meant each pass
+      // recompiled nearly every class; see CodegenCacheEntries
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       // spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold is LEFT AT
       // ITS DEFAULT (0 = no SMJ→SHJ rewrite) deliberately. Round 14
       // measured the 64m setting the optimization guide suggests trying:

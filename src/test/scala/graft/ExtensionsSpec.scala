@@ -16,6 +16,9 @@ class ExtensionsSpec extends AnyFunSuite {
       .master("local[2]")
       .appName("graft-ext-test")
       .config("spark.sql.shuffle.partitions", "2")
+      // same JVM-wide cache size as SparkSpec.session, whichever runs first
+      .config("spark.sql.codegen.cache.maxEntries",
+        GraftSession.CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions)
       .getOrCreate()

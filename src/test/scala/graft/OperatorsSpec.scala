@@ -290,6 +290,40 @@ class OperatorsSpec extends SparkSpec {
     assert(stats.getInt(0) == 3)
   }
 
+  test("native TokenStats fields equal the HOF formulas they replaced on real documents") {
+    val docs = spark.read.parquet(s"${sf("sf0.001")}/documents.parquet")
+    val stopwords = Seq("the", "a", "of", "and", "to", "in", "is", "it", "for", "on")
+    val t = col("text")
+    val toks = split(t, " ")
+    val oldStop = round(size(filter(toks, w => w.isin(stopwords.map(lit): _*)))
+      .cast("double") / greatest(size(toks), lit(1)), 6)
+    val oldFp = aggregate(toks, lit(0L), (acc, w) => xxhash64(acc, w))
+    val oldPunct = round(
+      (length(t) - length(regexp_replace(t, "[\\p{Punct}]", ""))).cast("double")
+        / greatest(length(t), lit(1)), 6)
+    val scored = graft.functions.TokenStats.langProfiles.map { case (lang, words) =>
+      struct(
+        size(array_intersect(array_distinct(split(lower(t), " ")),
+          array(words.map(lit): _*))).as("score"),
+        lit(lang).as("lang"))
+    }
+    val best = element_at(sort_array(array(scored: _*), asc = false), 1)
+    val oldLang = when(best.getField("score") > 0, best.getField("lang")).otherwise("und")
+    val pairs = Seq(
+      "stop" -> (oldStop, TextAnalysis.stopwordRatio(t)),
+      "fp" -> (oldFp, TextAnalysis.fingerprint(t)),
+      "punct" -> (oldPunct, TextAnalysis.punctRatio(t)),
+      "lang" -> (oldLang, TextAnalysis.langId(t)),
+      "n" -> (size(toks),
+        graft.functions.TokenStats.tokenStats(t).getField("n_tokens")))
+    val cmp = docs.select(col("doc_id") +: pairs.flatMap { case (n, (o, v)) =>
+      Seq(o.as(s"old_$n"), v.as(s"new_$n")) }: _*)
+    val bad = cmp.where(pairs.map { case (n, _) =>
+      !(col(s"old_$n") <=> col(s"new_$n")) }.reduce(_ || _))
+    assert(cmp.count() == 500)
+    assert(bad.isEmpty, bad.limit(5).collect().mkString("\n"))
+  }
+
   test("gopher rules: each rule falsifies independently; filter keeps clean doc") {
     import spark.implicits._
     val base = Seq.fill(5)(

@@ -21,6 +21,10 @@ object SparkSpec {
         .appName("graft-test")
         .config("spark.sql.shuffle.partitions", "4")
         .config("spark.sql.session.timeZone", "UTC")
+        // the generated-code cache is JVM-wide and sized once, by whichever
+        // suite's session starts first, so every test builder sets this
+        .config("spark.sql.codegen.cache.maxEntries",
+          GraftSession.CodegenCacheEntries.toString)
         // keep explicit partitionBy(lit(0)) specs — see GraftSession.tune
         .config("spark.sql.optimizer.excludedRules",
           "org.apache.spark.sql.catalyst.optimizer.EliminateWindowPartitions")
