@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftglue.{Glue, StatsWrite}
 import org.apache.spark.sql.types._
@@ -435,7 +436,9 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
   /** Contiguous `_row_id` assignment from the table's high-water mark
     * (reference allocates 0..n-1 on first insert, vastdb/tests/util.py:175-180).
     * Per-partition offsets via zipWithIndex — no global sort, no driver
-    * collect of data. */
+    * collect of data. A multi-partition batch pays one counting job for the
+    * offsets; a one-partition batch (every small driver-held batch, see
+    * [[oneFileIfSmallLocal]]) pays none. */
   private def assignRowIds(df: DataFrame, start: Long): DataFrame = {
     val schemaOut = StructType(df.schema.fields :+
       StructField(RowIdColumn, LongType, nullable = false))
@@ -459,6 +462,22 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
     * silently re-resolve to unrelated rows. */
   def overwrite(rows: DataFrame): (Long, Long) = writeBatch(rows, replace = true)
 
+  /** A batch whose rows are already on the driver (its optimized plan is a
+    * `LocalRelation`: `createDataFrame` of a local collection, or SQL
+    * `INSERT … VALUES`) and no larger than `spark.sql.files.openCostInBytes`
+    * — Spark's own estimate of what opening one file costs, in bytes
+    * scanned — is written as ONE partition: one write task, one file, and
+    * no `zipWithIndex` counting job. `LocalTableScan` would otherwise slice
+    * it to `defaultParallelism` files that every later read opens. Computed
+    * plans are left alone: their size estimate can be far below their real
+    * size, and `coalesce(1)` would pull their whole upstream onto one core. */
+  private def oneFileIfSmallLocal(df: DataFrame): DataFrame = {
+    val plan = df.queryExecution.optimizedPlan
+    val small = plan.isInstanceOf[LocalRelation] &&
+      plan.stats.sizeInBytes <= spark.sessionState.conf.filesOpenCostInBytes
+    if (small) df.coalesce(1) else df
+  }
+
   private def writeBatch(rows: DataFrame, replace: Boolean): (Long, Long) = {
     val m = manifest
     val logical = m.schema
@@ -470,10 +489,17 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
         projections = staleProjections(m),
         aggProjections = staleAggProjections(m),
         vectorIndexes = staleVectorIndexes(m)))
-    if (rows.columns.contains(RowIdColumn)) {
-      val aligned = rows.select(
-        (RowIdColumn +: logical.fieldNames.toIndexedSeq).map(col): _*)
-      val (bAligned, bOf) = bucketized(aligned, m)
+    val explicitIds = rows.columns.contains(RowIdColumn)
+    val aligned = oneFileIfSmallLocal(rows.select(
+      ((if (explicitIds) Seq(RowIdColumn) else Nil) ++ logical.fieldNames).map(col): _*))
+    if (explicitIds) {
+      // a NULL id would be stored unaddressable, its file's range recorded
+      // as [0, 0]: fail inside the write task instead (no extra job)
+      val checked = aligned.withColumn(RowIdColumn,
+        when(col(RowIdColumn).isNull, raise_error(lit(
+          s"$op: explicit $RowIdColumn is NULL; every row needs a non-NULL id")))
+          .otherwise(col(RowIdColumn)))
+      val (bAligned, bOf) = bucketized(checked, m)
       val entries = writeData(bAligned, sorted = false, bOf)
       if (entries.isEmpty) {
         // a 0-row overwrite is a TRUNCATE and must still stage; a 0-row
@@ -483,11 +509,10 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
       }
       val hi = entries.map(_.maxRowId).max + 1
       stage(entries, math.max(m.nextRowId, hi))
-      maintainBlobExpansions(m, aligned)
+      maintainBlobExpansions(m, checked)
       recordAudit(op, entries.map(_.rows).sum)
       return (entries.map(_.minRowId).min, hi)
     }
-    val aligned = rows.select(logical.fieldNames.map(col).toIndexedSeq: _*)
     val start = m.nextRowId
     val withIds = assignRowIds(aligned, start)
     val sortedWrite = m.sortingKeys.nonEmpty &&

@@ -62,8 +62,10 @@ object Dml {
 
   /** Contiguous 0-based row ids in `orderCols` order. NOTE: a global
     * row_number is a single-partition bottleneck — correct for id *assignment
-    * semantics parity*; the catalog's insert path uses per-partition offsets
-    * (zipWithIndex-style) instead, which scales. */
+    * semantics parity*. The catalog's insert path does not use it: ids there
+    * follow input order, from per-partition `zipWithIndex` offsets (one
+    * counting job for a multi-partition batch; none for a small
+    * driver-held batch, which is written as one partition). */
   def withRowIds(df: DataFrame, orderCols: Seq[String]): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(lit(0)).orderBy(orderCols.map(col): _*)

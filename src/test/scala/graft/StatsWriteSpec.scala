@@ -4,6 +4,8 @@ import java.nio.file.Files
 import java.sql.{Date, Timestamp}
 import java.time.LocalDateTime
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.graftspec.BusDrain
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -31,10 +33,16 @@ class StatsWriteSpec extends SparkSpec {
   /** Rows in 3 partitions, so one insert writes 3 files, each with its own
     * extremes: NaN and ±0.0 in the floating columns, supplementary
     * characters and values past the 64-char stat limit in the strings. */
-  private def data(n: Int): DataFrame = {
+  private def data(n: Int): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rowsOf(n), 3), schema)
+
+  /** The same rows held on the driver: a `LocalRelation` batch. */
+  private def local(n: Int): DataFrame = spark.createDataFrame(rowsOf(n).asJava, schema)
+
+  private def rowsOf(n: Int): Seq[Row] = {
     val strings = Seq("a", "😀", "￿", "é", long, surrogateAt64, "")
     val doubles = Seq(-0.0, 0.0, Double.NaN, 1.5, -2.25, Double.PositiveInfinity, 0.0)
-    val rows = (0 until n).map { k =>
+    (0 until n).map { k =>
       Row(k.toLong * 7 - 50, k % 11 - 5, doubles(k % doubles.size),
         doubles((k + 3) % doubles.size).toFloat,
         if (k % 5 == 4) null else strings(k % strings.size),
@@ -43,7 +51,6 @@ class StatsWriteSpec extends SparkSpec {
         Date.valueOf(s"20${10 + k % 20}-0${1 + k % 9}-1${k % 10}"),
         null)
     }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
   }
 
   private def freshTable(name: String): (VastSession, Transaction, Table) = {
@@ -120,15 +127,16 @@ class StatsWriteSpec extends SparkSpec {
     }
   }
 
+  private def jobsOf(group: String)(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try f finally sc.clearJobGroup()
+    BusDrain(sc)
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
   test("an insert runs no job reading its own output") {
     val (_, tx, t) = freshTable("jobs")
-    val sc = spark.sparkContext
-    def jobsOf(group: String)(f: => Unit): Int = {
-      sc.setJobGroup(group, group)
-      try f finally sc.clearJobGroup()
-      BusDrain(sc)
-      sc.statusTracker.getJobIdsForGroup(group).length
-    }
     val batch = data(200)
     // the row-id offsets of a multi-partition batch (zipWithIndex) and the write
     assert(jobsOf("sw-insert")(t.insert(batch)) == 2)
@@ -136,5 +144,76 @@ class StatsWriteSpec extends SparkSpec {
     val withIds = batch.withColumn(RowIdColumn, col("l") + 1000L)
     assert(jobsOf("sw-insert-ids")(t.insert(withIds)) == 1)
     tx.rollback()
+  }
+
+  test("a small driver-held batch is one file written by one job") {
+    val (_, tx, t) = freshTable("local")
+    t.insert(data(20))
+    val before = t.manifest.files.size
+    val batch = local(1000)
+    assert(jobsOf("sw-local")(assert(t.insert(batch) == ((20L, 1020L)))) == 1)
+    assert(t.manifest.files.size == before + 1)
+    // ids follow the batch's input order: row k was generated with l = 7k - 50
+    val ids = t.select(Seq("l"), internalRowId = true).select("l", RowIdColumn).collect()
+      .filter(_.getLong(1) >= 20L).map(r => (r.getLong(0), r.getLong(1)))
+    assert(ids.length == 1000 && ids.forall { case (l, id) => id == 20L + (l + 50) / 7 })
+    assertParity(t)
+    tx.rollback()
+  }
+
+  test("a small driver-held batch with explicit ids is one file") {
+    val (_, tx, t) = freshTable("localids")
+    assert(t.insert(local(1000).withColumn(RowIdColumn, col("l") + 10000L)) == ((9950L, 16944L)))
+    assert(t.manifest.files.size == 1 && t.manifest.nextRowId == 16944L)
+    tx.rollback()
+  }
+
+  test("a driver-held batch above spark.sql.files.openCostInBytes keeps its slices") {
+    val (_, tx, t) = freshTable("big")
+    val batch = local(1000)
+    val size = batch.queryExecution.optimizedPlan.stats.sizeInBytes
+    val key = "spark.sql.files.openCostInBytes"
+    def filesAt(bound: BigInt): (Int, Int) = {
+      val n0 = t.manifest.files.size
+      spark.conf.set(key, bound.toString)
+      val jobs = try jobsOf(s"sw-bound-$bound")(t.insert(batch)) finally spark.conf.unset(key)
+      (jobs, t.manifest.files.size - n0)
+    }
+    assert(filesAt(size) == ((1, 1)), "a batch exactly at the bound is one file")
+    val (jobs, files) = filesAt(size - 1)
+    assert(jobs == 2 && files > 1)
+    tx.rollback()
+  }
+
+  test("a 0-row driver-held insert stages nothing") {
+    val (s, tx, t) = freshTable("local0")
+    t.insert(local(20))
+    tx.commit()
+    s.transaction { tx2 =>
+      val t2 = tx2.bucket("b").schema("m").table("local0")
+      val m = t2.manifest
+      assert(t2.insert(local(0)) == ((20L, 20L)))
+      assert(t2.manifest.files == m.files && t2.manifest.version == m.version)
+    }
+  }
+
+  test("an explicit NULL _row_id fails the insert and stages nothing") {
+    val (s, tx, t) = freshTable("nullid")
+    t.insert(local(20))
+    tx.commit()
+    def table(x: Transaction) = x.bucket("b").schema("m").table("nullid")
+    val m = s.transaction(x => table(x).manifest)
+    val ids = local(2).withColumn(RowIdColumn,
+      when(col("l") === -50L, lit(null).cast(LongType)).otherwise(lit(7000L)))
+    val tx2 = s.beginTransaction()
+    val e = intercept[Exception](table(tx2).insert(ids))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(x => x.getMessage != null && x.getMessage.contains("NULL")), e.toString)
+    tx2.rollback()
+    s.transaction { tx3 =>
+      val after = table(tx3).manifest
+      assert(after.version == m.version && after.files == m.files &&
+        after.nextRowId == m.nextRowId)
+    }
   }
 }
