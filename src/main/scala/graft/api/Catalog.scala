@@ -62,7 +62,23 @@ object Manifest {
                        renames: Map[String, String] = Map.empty,
                        colStats: Map[String, ColStat] = Map.empty,
                        bytes: Long = 0L,
-                       bucket: Int = -1)
+                       bucket: Int = -1) {
+    /** This file's physical column for `logical`: see [[FileEntry.physicalName]]. */
+    def physicalName(logical: String): String =
+      FileEntry.physicalName(renames, logical)
+  }
+  object FileEntry {
+    /** The physical column holding `logical` in a file whose rename map is
+      * `renames` (physical → logical): the renamed physical name; else
+      * `__absent_<logical>` when the same-named physical column is claimed
+      * by ANOTHER logical (a rename or a drop tombstone), so readers
+      * null-fill it instead of reading those bytes; else the name itself.
+      * Zone-map stats are keyed by physical name, so pruning looks them up
+      * through this too (an `__absent_` column has no stats → kept). */
+    def physicalName(renames: Map[String, String], logical: String): String =
+      renames.collectFirst { case (p, `logical`) => p }.getOrElse(
+        if (renames.contains(logical)) s"__absent_$logical" else logical)
+  }
   /** `stale` flips on any base-table DML so the picker stops serving the
     * projection until `refreshProjection` rebuilds it (the reference
     * maintains semi-sorted projections transparently server-side; here

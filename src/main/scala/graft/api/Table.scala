@@ -105,38 +105,26 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
       return session.createDataFrame(
         session.sparkContext.emptyRDD[Row], withRid)
     entries.groupBy(_.renames).map { case (renames, group) =>
-      val inverse = renames.map(_.swap) // logical -> physical
-      val phys = StructType(withRid.fields.map { f =>
-        // a physical column claimed by a rename (incl. drop tombstones) must
-        // not be read under a same-named NEW logical column — request a
-        // nonexistent name so the parquet reader null-fills it instead
-        val p = inverse.getOrElse(f.name,
-          if (renames.contains(f.name)) s"__absent_${f.name}" else f.name)
-        f.copy(name = p)
-      })
+      val phys = StructType(withRid.fields.map(f =>
+        f.copy(name = FileEntry.physicalName(renames, f.name))))
       session.read.schema(phys).parquet(group.map(e => resolveDataPath(e.path)): _*)
         .toDF(withRid.fieldNames.toSeq: _*)
     }.reduce(_ unionByName _)
   }
 
-  /** Projection picker: a materialized projection serves the scan when it
-    * covers projected ∪ predicate columns; among candidates prefer one whose
-    * leading sort column appears in the predicate (mirrors the server's
-    * semi-sorted projection selection, vastdb/tests/test_projections.py:102-125). */
+  /** Projection picker: `QueryConfig` can switch projections off or name
+    * one; otherwise [[Table.coveringProjection]] decides. Stale projections
+    * (base table mutated since the last build/refresh) never serve a scan —
+    * even when named explicitly — since they'd return missing/deleted/old
+    * rows; the base scan is the correct fallback. */
   private def pickProjection(m: TableManifest, needed: Set[String],
                              predRoots: Set[String],
                              config: QueryConfig): Option[ProjectionMeta] = {
     if (!config.useSemiSortedProjections) return None
-    // stale projections (base table mutated since the last build/refresh)
-    // never serve a scan — even when named explicitly — since they'd return
-    // missing/deleted/old rows; the base scan is the correct fallback.
     val fresh = m.projections.filterNot(_.stale)
     config.semiSortedProjectionName match {
       case Some(n) => fresh.find(_.name == n)
-      case None =>
-        val covering = fresh.filter(p => needed.subsetOf(p.columns.toSet))
-        covering.find(p => p.sortedColumns.headOption.exists(predRoots))
-          .orElse(covering.headOption)
+      case None => Table.coveringProjection(fresh, needed, predRoots)
     }
   }
 
@@ -204,9 +192,10 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
         val projSchema = StructType(logical.fields.filter(f => p.columns.contains(f.name)))
         scanSession.read.schema(projSchema.add(RowIdColumn, LongType)).parquet(pdir)
       case None =>
-        readEntries(Table.pruneByBucketEq(
-          pruneByZoneMaps(m.files, predicate), m, predicate), logical,
-          scanSession)
+        val eqs = Glue.rangeConstraints(predicate)
+          .collect { case (c, "=", v) if v != null => (c, Seq(v)) }
+        readEntries(Table.pruneByBucket(pruneByZoneMaps(m.files, predicate),
+          logical, m.bucketKeys, m.bucketCount, eqs), logical, scanSession)
     }
     val projected = base.filter(predicate)
       .select((if (internalRowId) RowIdColumn +: cols else cols).map(col): _*)
@@ -483,12 +472,7 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
     val logical = m.schema
     val op = if (replace) "overwrite" else "insert"
     def stage(entries: Seq[FileEntry], nextId: Long): Unit =
-      tx.stageWrite(dir, m.copy(
-        files = (if (replace) Seq.empty else m.files) ++ entries,
-        nextRowId = nextId,
-        projections = staleProjections(m),
-        aggProjections = staleAggProjections(m),
-        vectorIndexes = staleVectorIndexes(m)))
+      stageContent(m, (if (replace) Seq.empty else m.files) ++ entries, nextId)
     val explicitIds = rows.columns.contains(RowIdColumn)
     val aligned = oneFileIfSmallLocal(rows.select(
       ((if (explicitIds) Seq(RowIdColumn) else Nil) ++ logical.fieldNames).map(col): _*))
@@ -529,22 +513,24 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
     (start, start + n)
   }
 
-  /** DML invalidates materialized projections (they'd serve missing/deleted/
-    * old rows); `refreshProjection` rebuilds and re-enables them. */
-  private def staleProjections(m: TableManifest): Seq[ProjectionMeta] =
-    m.projections.map(_.copy(stale = true))
-
-  /** Same protocol for rollups: DML stales them (the router falls back to
-    * the base files — fast-but-wrong pre-aggregates are never acceptable);
-    * `refreshAggProjection` rebuilds. */
-  private def staleAggProjections(m: TableManifest): Seq[AggProjectionMeta] =
-    m.aggProjections.map(_.copy(stale = true))
-
-  /** Same protocol for vector indexes: DML stales them (search falls back to
-    * exact brute force — approximate-but-missing-rows is never acceptable);
-    * `refreshVectorIndex` rebuilds. */
-  private def staleVectorIndexes(m: TableManifest): Seq[VectorIndexMeta] =
-    m.vectorIndexes.map(_.copy(stale = true))
+  /** Stage new table contents (`files`, high-water mark `nextRowId`) and
+    * mark every materialization derived from the old contents stale — the
+    * one staging step of insert, overwrite, update, delete and the SQL
+    * row-level COW:
+    *  - projections would serve missing/deleted/old rows;
+    *    `refreshProjection` rebuilds and re-enables them;
+    *  - rollups: the router falls back to the base files (fast-but-wrong
+    *    pre-aggregates are never acceptable); `refreshAggProjection`
+    *    rebuilds;
+    *  - vector indexes: search falls back to exact brute force
+    *    (approximate-but-missing-rows is never acceptable);
+    *    `refreshVectorIndex` rebuilds. */
+  private def stageContent(m: TableManifest, files: Seq[FileEntry],
+                           nextRowId: Long): Unit =
+    tx.stageWrite(dir, m.copy(files = files, nextRowId = nextRowId,
+      projections = m.projections.map(_.copy(stale = true)),
+      aggProjections = m.aggProjections.map(_.copy(stale = true)),
+      vectorIndexes = m.vectorIndexes.map(_.copy(stale = true))))
 
   /** Exact COW touch set: indices (into `files`) of the files whose row-id
     * range contains at least one victim id. One distributed pass over the
@@ -592,31 +578,8 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
     * Copy-on-write bounded to the files that actually CONTAIN a victim id
     * (exact per-file membership via `victimFileIndices`); untouched files
     * carry over to the new version. */
-  def update(updates: DataFrame): Unit = {
-    if (!updates.columns.contains(RowIdColumn)) throw MissingRowIdColumn()
-    val m = manifest
-    // one materialization of the batch (cache) feeds the membership probe,
-    // the merge, and the audit count — previously three scans of the source
-    val batch = updates.cache()
-    val n = batch.count()
-    if (n == 0) { batch.unpersist(); return }
-    val touchedIdx = victimFileIndices(batch, m.files)
-    val (touchedZ, untouchedZ) =
-      m.files.zipWithIndex.partition { case (_, i) => touchedIdx(i) }
-    val (touched, untouched) = (touchedZ.map(_._1), untouchedZ.map(_._1))
-    val current = readEntries(touched, m.schema)
-    val merged = Dml.updateByRowId(current, batch)
-    // COW merges victims across buckets — shuffling the rewrite back into
-    // the layout keeps co-bucketed joins shuffle-free through updates
-    val (bMerged, bOf) = bucketized(merged, m)
-    val entries = writeData(bMerged, sorted = false, bOf)
-    tx.stageWrite(dir, m.copy(files = untouched ++ entries,
-      projections = staleProjections(m),
-      aggProjections = staleAggProjections(m),
-      vectorIndexes = staleVectorIndexes(m)))
-    batch.unpersist()
-    recordAudit("update", n)
-  }
+  def update(updates: DataFrame): Unit =
+    rewriteByRowId(updates, "update", Dml.updateByRowId)
 
   /** Predicate-addressed UPDATE: SET `assignments` on every row matching
     * `cond` — the select-then-mutate pattern packaged (victims resolved with
@@ -633,25 +596,34 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
 
   /** DELETE by `_row_id` (reference vastdb/table.py:818-843). COW bounded to
     * the files that actually contain a victim id, like `update`. */
-  def delete(victims: DataFrame): Unit = {
-    if (!victims.columns.contains(RowIdColumn)) throw MissingRowIdColumn()
+  def delete(victims: DataFrame): Unit =
+    rewriteByRowId(victims, "delete", Dml.deleteByRowId)
+
+  /** The row-id-addressed copy-on-write shared by `update` and `delete`:
+    * `transform(touchedRows, batch)` yields the replacement rows of the
+    * files holding a victim id. One materialization of the batch (cache)
+    * feeds the count, the membership probe and the rewrite; it is released
+    * however the operation ends. */
+  private def rewriteByRowId(rows: DataFrame, op: String,
+                             transform: (DataFrame, DataFrame) => DataFrame)
+      : Unit = {
+    if (!rows.columns.contains(RowIdColumn)) throw MissingRowIdColumn()
     val m = manifest
-    val batch = victims.cache()
-    val n = batch.count()
-    if (n == 0) { batch.unpersist(); return }
-    val touchedIdx = victimFileIndices(batch, m.files)
-    val (touchedZ, untouchedZ) =
-      m.files.zipWithIndex.partition { case (_, i) => touchedIdx(i) }
-    val (touched, untouched) = (touchedZ.map(_._1), untouchedZ.map(_._1))
-    val remaining = Dml.deleteByRowId(readEntries(touched, m.schema), batch)
-    val (bRemaining, bOf) = bucketized(remaining, m)
-    val entries = writeData(bRemaining, sorted = false, bOf)
-    tx.stageWrite(dir, m.copy(files = untouched ++ entries,
-      projections = staleProjections(m),
-      aggProjections = staleAggProjections(m),
-      vectorIndexes = staleVectorIndexes(m)))
-    batch.unpersist()
-    recordAudit("delete", n)
+    val batch = rows.cache()
+    try {
+      val n = batch.count()
+      if (n == 0) return
+      val touchedIdx = victimFileIndices(batch, m.files)
+      val (touchedZ, untouchedZ) =
+        m.files.zipWithIndex.partition { case (_, i) => touchedIdx(i) }
+      val rewritten = transform(readEntries(touchedZ.map(_._1), m.schema), batch)
+      // COW merges victims across buckets — shuffling the rewrite back into
+      // the layout keeps co-bucketed joins shuffle-free through DML
+      val (bRewritten, bOf) = bucketized(rewritten, m)
+      val entries = writeData(bRewritten, sorted = false, bOf)
+      stageContent(m, untouchedZ.map(_._1) ++ entries, m.nextRowId)
+      recordAudit(op, n)
+    } finally batch.unpersist()
   }
 
   /** Publish externally-staged parquet files as this table's new contents —
@@ -680,10 +652,7 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
     val hi =
       if (entries.isEmpty) m.nextRowId
       else math.max(m.nextRowId, entries.map(_.maxRowId).max + 1)
-    tx.stageWrite(dir, m.copy(files = kept ++ entries, nextRowId = hi,
-      projections = staleProjections(m),
-      aggProjections = staleAggProjections(m),
-      vectorIndexes = staleVectorIndexes(m)))
+    stageContent(m, kept ++ entries, hi)
     recordAudit(op, entries.map(_.rows).sum)
   }
 
@@ -1790,6 +1759,42 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
     Some((rel, c))
   }
 
+  /** The column's declared search metric (its vector index's; `l2sq`
+    * without an index) as a distance-to-`queryVec` function: smaller is
+    * nearer, so `ip` is negated. */
+  private def distanceTo(m: TableManifest, column: String,
+                         queryVec: Seq[Float]): Column => Column = {
+    val metric = m.vectorIndexes.find(_.column == column)
+      .map(_.metric).getOrElse("l2sq")
+    val q = lit(queryVec.toArray).cast("array<float>")
+    v => metric match {
+      case "ip" => -Distances.ip(v, q)
+      case _ => Distances.l2sq(v, q)
+    }
+  }
+
+  /** Exact brute-force top-k over the base table: every qualifying row
+    * (all columns + `_row_id`) with its `_distance`, distance-then-rowid
+    * ordered. */
+  private def bruteForceTopK(m: TableManifest, column: String,
+                             queryVec: Seq[Float], k: Int,
+                             predicate: Column): DataFrame =
+    select(Nil, predicate, internalRowId = true)
+      .withColumn("_distance", distanceTo(m, column, queryVec)(col(column)))
+      .orderBy(col("_distance").asc, col(RowIdColumn).asc)
+      .limit(k)
+
+  /** Top-k ids only — `(_row_id, _distance)` without hydrating payload
+    * columns: IVF-routed when the index is fresh, exact brute force
+    * otherwise. The shape for callers (e.g. the SQL `vector_search`
+    * procedure) that join payload back themselves, or don't need it:
+    * skips the winner-file fetch entirely. */
+  def vectorSearchIds(column: String, queryVec: Seq[Float], k: Int,
+                      predicate: Column = lit(true), nprobe: Int = 4): DataFrame =
+    ivfTopK(column, queryVec, k, predicate, nprobe).getOrElse(
+      bruteForceTopK(manifest, column, queryVec, k, predicate)
+        .select(col(RowIdColumn), col("_distance")))
+
   /** Top-k vector search with optional pushdown predicate (reference
     * vector_search → `ORDER BY array_distance LIMIT k`, vastdb/_adbc.py:133-159).
     *
@@ -1803,39 +1808,9 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
     * Without an index (or with a stale one) the scan is the exact brute
     * force over the base table. Both paths return the same shape:
     * (`_row_id`, all columns, `_distance`), distance-then-rowid ordered. */
-  /** Top-k ids only — `(_row_id, _distance)` without hydrating payload
-    * columns: IVF-routed when the index is fresh, exact brute force
-    * otherwise. The shape for callers (e.g. the SQL `vector_search`
-    * procedure) that join payload back themselves, or don't need it:
-    * skips the winner-file fetch entirely. */
-  def vectorSearchIds(column: String, queryVec: Seq[Float], k: Int,
-                      predicate: Column = lit(true), nprobe: Int = 4): DataFrame = {
-    val m = manifest
-    val metric = m.vectorIndexes.find(_.column == column)
-      .map(_.metric).getOrElse("l2sq")
-    val q = lit(queryVec.toArray).cast("array<float>")
-    def distOf(v: Column) = metric match {
-      case "ip" => -Distances.ip(v, q)
-      case _ => Distances.l2sq(v, q)
-    }
-    ivfTopK(column, queryVec, k, predicate, nprobe).getOrElse(
-      select(Nil, predicate, internalRowId = true)
-        .withColumn("_distance", distOf(col(column)))
-        .orderBy(col("_distance").asc, col(RowIdColumn).asc)
-        .limit(k)
-        .select(col(RowIdColumn), col("_distance")))
-  }
-
   def vectorSearch(column: String, queryVec: Seq[Float], k: Int,
                    predicate: Column = lit(true), nprobe: Int = 4): DataFrame = {
     val m = manifest
-    val metric = m.vectorIndexes.find(_.column == column)
-      .map(_.metric).getOrElse("l2sq")
-    val q = lit(queryVec.toArray).cast("array<float>")
-    def distOf(v: Column) = metric match {
-      case "ip" => -Distances.ip(v, q)
-      case _ => Distances.l2sq(v, q)
-    }
     ivfTopK(column, queryVec, k, predicate, nprobe) match {
       case Some(top) =>
         // Materialize the k winners NOW (a bounded collect: exactly the k
@@ -1857,11 +1832,7 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
         readEntries(fetchFiles, m.schema)
           .join(broadcast(winDf), Seq(RowIdColumn))
           .orderBy(col("_distance").asc, col(RowIdColumn).asc)
-      case None =>
-        select(Nil, predicate, internalRowId = true)
-          .withColumn("_distance", distOf(col(column)))
-          .orderBy(col("_distance").asc, col(RowIdColumn).asc)
-          .limit(k)
+      case None => bruteForceTopK(m, column, queryVec, k, predicate)
     }
   }
 
@@ -1873,12 +1844,7 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
                              nprobe: Int): Option[DataFrame] = {
     val m = manifest
     val meta = m.vectorIndexes.find(_.column == column)
-    val metric = meta.map(_.metric).getOrElse("l2sq")
-    val q = lit(queryVec.toArray).cast("array<float>")
-    def distOf(v: Column) = metric match {
-      case "ip" => -Distances.ip(v, q)
-      case _ => Distances.l2sq(v, q)
-    }
+    val distOf = distanceTo(m, column, queryVec)
     meta.filter(x => x.dir.nonEmpty && !x.stale).map { x =>
       val idxRoot = resolveDataPath(x.dir)
       // bounded collect: ≤ nCentroids (≤4096) index-metadata rows — the
@@ -2608,9 +2574,26 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
 
 object Table {
 
+  /** The covering-projection rule, shared by `Table.select` and the SQL
+    * scan builder (`ZoneMapScanBuilder`): among `fresh` projections, those
+    * whose columns contain everything `needed` except `_row_id` (projection
+    * files always carry it) can serve the scan; prefer one whose LEADING
+    * sort column appears in `filterRoots` — its row-group locality is what
+    * the filters can exploit (the server's semi-sorted projection
+    * selection, vastdb/tests/test_projections.py:102-125). */
+  def coveringProjection(fresh: Seq[ProjectionMeta], needed: Set[String],
+                         filterRoots: Set[String]): Option[ProjectionMeta] = {
+    val covering =
+      fresh.filter(p => (needed - RowIdColumn).subsetOf(p.columns.toSet))
+    covering.find(_.sortedColumns.headOption.exists(filterRoots))
+      .orElse(covering.headOption)
+  }
+
   /** Zone-map file pruning: drop files whose per-column min/max provably
     * can't satisfy a top-level range constraint (constraints extracted from
-    * the unresolved Column tree by Glue.rangeConstraints). Conservative —
+    * the unresolved Column tree by Glue.rangeConstraints). Stats are keyed
+    * by PHYSICAL name, so each logical column is looked up through the
+    * file's rename map ([[FileEntry.physicalName]]). Conservative —
     * missing stats keep the file; exactness comes from the scan's own
     * filter (or, for the SQL row-level COW, from whole-file group
     * replacement: pruning only ever KEEPS whole files, never drops rows). */
@@ -2619,7 +2602,7 @@ object Table {
     if (cons.isEmpty) return entries
     entries.filter { f =>
       cons.forall { case (c, op, raw) =>
-        (f.colStats.get(c), normalizeStatValue(raw)) match {
+        (f.colStats.get(f.physicalName(c)), normalizeStatValue(raw)) match {
           case (Some(st), Some(v)) => statMayMatch(st, op, v)
           case _ => true
         }
@@ -2657,45 +2640,44 @@ object Table {
     } catch { case _: Exception => true } // type mismatch → keep
   }
 
-  /** Bucket pruning for the API scan — the point-lookup complement of zone
-    * maps, which a hash layout defeats (every bucket file spans the key's
-    * whole range): a conjunctive equality on the single bucket key keeps
-    * only the files of `pmod(murmur3(value), n)`, 1/n of the table before
-    * a single footer is read. Conservative: requires a complete layout
-    * (post-rewrite DML files carry no bucket id → no pruning), only
-    * top-level `=` constraints, value conversion failure keeps everything.
-    * The SQL path's twin lives in `ZoneMapScanBuilder.pruneByBucket`. */
-  private[graft] def pruneByBucketEq(entries: Seq[FileEntry],
-                                     m: Manifest.TableManifest,
-                                     predicate: Column): Seq[FileEntry] = {
-    if (m.bucketKeys.size != 1 || m.bucketCount <= 0 ||
+  /** Bucket pruning — the point-lookup complement of zone maps, which a
+    * hash layout defeats (every bucket file spans the key's whole value
+    * range): conjuncts restricting the single bucket key to a value set
+    * (`=` gives one value, `IN` several; `valueSets` pairs each conjunct's
+    * column with its values) keep only the files of the buckets
+    * `pmod(murmur3(value, 42), bucketCount)` those values hash to — the
+    * write-side assignment — so a point lookup touches 1/n of the table
+    * before a single footer is read. Conjuncts must all hold, so the kept
+    * bucket set is the intersection; nulls match nothing. Conservative:
+    * requires a complete layout (a post-rewrite DML file carries no bucket
+    * id → no pruning), and a value that fails to convert to the key's
+    * Catalyst form keeps every file. Used by the API scan and the SQL scan
+    * builder alike. */
+  def pruneByBucket(entries: Seq[FileEntry], schema: StructType,
+                    bucketKeys: Seq[String], bucketCount: Int,
+                    valueSets: Seq[(String, Seq[Any])]): Seq[FileEntry] = {
+    if (bucketKeys.size != 1 || bucketCount <= 0 ||
         entries.isEmpty || !entries.forall(_.bucket >= 0)) return entries
-    val key = m.bucketKeys.head
-    val keyType = m.schema.fields.find(_.name == key)
+    val key = bucketKeys.head
+    val keyType = schema.fields.find(_.name == key)
       .map(_.dataType).getOrElse(return entries)
-    val eqs = Glue.rangeConstraints(predicate)
-      .collect { case (c, "=", v) if c == key && v != null => v }
-    if (eqs.isEmpty) return entries
+    val sets = valueSets.collect { case (`key`, vs) => vs.filter(_ != null) }
+    if (sets.isEmpty) return entries
     val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
       .createToCatalystConverter(keyType)
-    def bucketOf(v: Any): Option[Int] =
-      try {
-        val cat = v match {
-          // rangeConstraints may surface values already in Catalyst form
-          case u: org.apache.spark.unsafe.types.UTF8String => u
-          case other => conv(other)
-        }
-        val h = org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction
-          .hash(cat, keyType, 42).toInt
-        Some(((h % m.bucketCount) + m.bucketCount) % m.bucketCount)
-      } catch { case _: Exception => None }
-    val buckets = eqs.map(bucketOf)
-    if (buckets.exists(_.isEmpty)) return entries // unconvertible → keep all
-    // conjunctive equalities must all hold, so the surviving bucket set is
-    // the intersection of the singletons (disagreeing equalities = no rows)
-    val ws = buckets.flatten.toSet
-    if (ws.size == 1) entries.filter(f => f.bucket == ws.head)
-    else entries.filter(_ => false)
+    def bucketOf(v: Any): Int = {
+      val cat = v match {
+        // rangeConstraints may surface values already in Catalyst form
+        case u: org.apache.spark.unsafe.types.UTF8String => u
+        case other => conv(other)
+      }
+      val h = org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction
+        .hash(cat, keyType, 42).toInt
+      ((h % bucketCount) + bucketCount) % bucketCount
+    }
+    val kept = try sets.map(_.map(bucketOf).toSet).reduce(_ intersect _)
+      catch { case _: Exception => return entries } // unconvertible → keep all
+    entries.filter(f => kept.contains(f.bucket))
   }
 
   /** EXACT membership pruning for an IN-set: keep a file iff SOME value can
@@ -2754,7 +2736,7 @@ object Table {
       else None
 
     entries.filter { f =>
-      f.colStats.get(column) match {
+      f.colStats.get(f.physicalName(column)) match {
         case Some(st) =>
           try st.kind match {
             case "long" if longs.isDefined =>

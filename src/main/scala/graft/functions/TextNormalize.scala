@@ -59,10 +59,4 @@ object NfcNormalize {
 
   /** NFC normalization of a string column. */
   def nfc(c: Column): Column = Glue.column(NfcNormalize(Glue.expression(c)))
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = Glue.registry(spark)
-    reg.createOrReplaceTempFunction("nfc_normalize",
-      es => NfcNormalize(es.head), "built-in")
-  }
 }

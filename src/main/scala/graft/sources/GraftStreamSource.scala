@@ -374,15 +374,11 @@ private[graft] class GraftStreamScan(dir: Path, required: StructType,
         case _ => (None, builderFilters) // rule skipped: prune nothing
       }
     files.groupBy(_.renames).toSeq.flatMap { case (renames, group) =>
-      val inverse = renames.map(_.swap) // current-logical -> physical
       val phys = StructType(required.fields.map { f =>
         if (needed.exists(n => !n.contains(f.name) && f.name != "_row_id"))
           f.copy(name = s"__pruned_${f.name}") // null-filled, never decoded
-        else {
-          val cur = curNames(f.name)
-          f.copy(name = inverse.getOrElse(cur,
-            if (renames.contains(cur)) s"__absent_$cur" else cur))
-        }
+        else f.copy(name =
+          Manifest.FileEntry.physicalName(renames, curNames(f.name)))
       })
       val physByLogical = required.fieldNames.zip(phys.fieldNames).toMap
       val translated = pushed.map(_.transform {

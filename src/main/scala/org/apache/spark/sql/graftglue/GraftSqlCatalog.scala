@@ -209,33 +209,15 @@ class GraftSqlCatalog extends TableCatalog with SupportsNamespaces
       else new RenameUnionTable(ident.toString, schema, groups, rollups)
         with GraftTableProps { val tableProps = m.props }
     } else {
-      val paths = m.files.map(f => graft.api.Table.resolvePath(dir, f.path)).toList
-      val fresh = m.projections.filterNot(_.stale).map(p =>
-        (p.columns.toSet + "_row_id", p.sortedColumns.headOption,
-          graft.api.Table.resolvePath(dir, p.dir)))
-      if (fresh.nonEmpty) {
-        // covered scans route to a materialized projection, like the picker
-        // in Table.select (and the reference server's transparent selection)
-        if (writable)
-          new ProjectionRoutingTable(ident.toString, schema, paths, fresh,
-              rollups)
-            with GraftV1Writable with GraftTableProps {
-              val writeRoot = root; val writeIdent = ident; val tableProps = m.props }
-        else new ProjectionRoutingTable(ident.toString, schema, paths, fresh,
-            rollups)
-          with GraftTableProps { val tableProps = m.props }
-      } else {
-        // plain (rename-free, no projections): the zone-map table prunes
-        // whole FILES from pushed filters before parquet ever opens them
-        if (writable)
-          new ZoneMapTable(ident.toString, schema, dir, m.files,
-              m.bucketKeys, m.bucketCount, rollups)
-            with GraftV1Writable with GraftTableProps {
-              val writeRoot = root; val writeIdent = ident; val tableProps = m.props }
-        else new ZoneMapTable(ident.toString, schema, dir, m.files,
-            m.bucketKeys, m.bucketCount, rollups)
-          with GraftTableProps { val tableProps = m.props }
-      }
+      // rename-free: the zone-map table prunes whole FILES from pushed
+      // filters before parquet ever opens them, and routes scans a fresh
+      // projection covers to it (like the picker in Table.select)
+      if (writable)
+        new ZoneMapTable(ident.toString, schema, dir, m, rollups)
+          with GraftV1Writable with GraftTableProps {
+            val writeRoot = root; val writeIdent = ident; val tableProps = m.props }
+      else new ZoneMapTable(ident.toString, schema, dir, m, rollups)
+        with GraftTableProps { val tableProps = m.props }
     }
   }
 
@@ -1888,15 +1870,12 @@ private[graftglue] class GraftGroupCowOperation(
       override def pushFilters(filters: Array[Filter]): Array[Filter] = {
         // group pruning only — sound because files are either fully
         // rewritten (scanned) or fully kept (pruned out); a file with ANY
-        // possibly-matching row is conservatively kept in the scan.
-        // Rename-evolved manifests skip pruning: their zone-map stats were
-        // collected under generation-local column names.
-        if (manifest.files.forall(_.renames.isEmpty)) {
-          val cond = filters.flatMap(GraftFilters.filterToColumn)
-            .reduceOption(_ && _)
-          cond.foreach(c =>
-            scanned = graft.api.Table.pruneByZoneMaps(manifest.files, c))
-        }
+        // possibly-matching row is conservatively kept in the scan
+        // (zone-map stats are looked up through each file's rename map)
+        val cond = filters.flatMap(GraftFilters.filterToColumn)
+          .reduceOption(_ && _)
+        cond.foreach(c =>
+          scanned = graft.api.Table.pruneByZoneMaps(manifest.files, c))
         filters // nothing handled at row level; Spark keeps the semantics
       }
 

@@ -98,18 +98,13 @@ private[graftglue] class RenameUnionScan(
   }
 
   // one delegated parquet scan per rename group: the group's physical names
-  // are requested in logical field order, and each filter is re-addressed to
-  // the physical names so the delegate can translate it into parquet
-  // row-group pruning
+  // (FileEntry.physicalName — the rule Table.readEntries uses) are requested
+  // in logical field order, and each filter is re-addressed to the same
+  // physical names so the delegate can translate it into parquet row-group
+  // pruning
   private lazy val groupScans: Seq[Scan] = groups.map { case (renames, paths) =>
-    val inverse = renames.map(_.swap) // logical -> physical
-    val phys = StructType(required.fields.map { f =>
-      // physical names claimed by a rename (incl. drop tombstones) null-fill
-      // under a same-named new logical column — mirror Table.readEntries
-      val p = inverse.getOrElse(f.name,
-        if (renames.contains(f.name)) s"__absent_${f.name}" else f.name)
-      f.copy(name = p)
-    })
+    val phys = StructType(required.fields.map(f =>
+      f.copy(name = graft.api.Manifest.FileEntry.physicalName(renames, f.name))))
     val pt = ParquetTable(tableName, SparkSession.active,
       CaseInsensitiveStringMap.empty(), paths.toList, Some(phys),
       classOf[ParquetFileFormat])
@@ -117,8 +112,8 @@ private[graftglue] class RenameUnionScan(
     sb match {
       case f: org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters =>
         val translated = filters.map(_.transform {
-          case a: org.apache.spark.sql.catalyst.expressions.AttributeReference
-              if inverse.contains(a.name) => a.withName(inverse(a.name))
+          case a: org.apache.spark.sql.catalyst.expressions.AttributeReference =>
+            a.withName(graft.api.Manifest.FileEntry.physicalName(renames, a.name))
         })
         f.pushFilters(translated)
       case _ => ()

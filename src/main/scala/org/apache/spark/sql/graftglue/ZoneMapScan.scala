@@ -20,33 +20,37 @@ import org.apache.spark.sql.execution.datasources.{DataSourceStrategy, FileParti
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScanBuilder, ParquetTable}
 import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
-import org.apache.spark.sql.sources.{Filter, In}
+import org.apache.spark.sql.sources.{And, EqualTo, Filter, In}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
 /**
- * SQL-read-path table with manifest zone-map FILE pruning: the scan builder
- * intercepts pushed filters, drops whole files whose per-column min/max
- * envelopes cannot match (`graft.api.Table.pruneByZoneMaps` — the same
- * pruning the API scan applies in `Table.select`), and only then hands off
- * to Spark's own parquet builder over the kept paths. Parquet row-group
- * pruning still happens INSIDE each kept file (filters are forwarded
- * verbatim), so this adds the layer parquet cannot provide at 100 TB: not
- * opening — not even for a footer read — the files the manifest already
- * proves empty for the predicate. On a z-ordered or sorted table a
- * selective SELECT through the SQL catalog then touches a handful of files
- * out of thousands, with zero extra I/O spent deciding so.
+ * The SQL table of every rename-free manifest, with manifest zone-map FILE
+ * pruning: the scan builder intercepts pushed filters, drops whole files
+ * whose per-column min/max envelopes cannot match
+ * (`graft.api.Table.pruneByZoneMaps` — the same pruning the API scan
+ * applies in `Table.select`), and only then hands off to Spark's own
+ * parquet builder over the kept paths. Parquet row-group pruning still
+ * happens INSIDE each kept file (filters are forwarded verbatim), so this
+ * adds the layer parquet cannot provide at 100 TB: not opening — not even
+ * for a footer read — the files the manifest already proves empty for the
+ * predicate. On a z-ordered or sorted table a selective SELECT through the
+ * SQL catalog then touches a handful of files out of thousands, with zero
+ * extra I/O spent deciding so.
  *
- * Only used on rename-free manifests (zone-map stats are generation-local
- * under lazy renames; `loadAt` routes rename-evolved tables elsewhere).
+ * A scan that a FRESH projection covers reads the projection instead (the
+ * reference server's transparent projection selection,
+ * vastdb/tests/test_projections.py:102-125); every other scan keeps all
+ * pruning layers — a projection never switches them off.
+ *
+ * Rename-evolved manifests are served by [[RenameUnionTable]].
  */
 private[graftglue] class ZoneMapTable(
     tableName: String, tableSchema: StructType, tdir: java.nio.file.Path,
-    entries: Seq[graft.api.Manifest.FileEntry],
-    bucketKeys: Seq[String] = Nil, bucketCount: Int = 0,
-    // FRESH rollups only (stale ones are excluded at loadTable, like
-    // projections): (meta, resolved data dir) for AggProjectionRewrite
+    m: graft.api.Manifest.TableManifest,
+    // FRESH rollups only (stale ones are excluded at loadTable):
+    // (meta, resolved data dir) for AggProjectionRewrite
     val aggRollups: Seq[(graft.api.Manifest.AggProjectionMeta, String)] = Nil)
     extends Table with SupportsRead with HasAggRollups {
   override def name(): String = tableName
@@ -56,61 +60,61 @@ private[graftglue] class ZoneMapTable(
   // declared partitioning surfaces in DESCRIBE and lets Catalyst know the
   // layout exists even before a scan is built
   override def partitioning(): Array[Transform] =
-    if (bucketKeys.nonEmpty && bucketCount > 0)
-      Array(Expressions.bucket(bucketCount, bucketKeys: _*))
+    if (m.bucketKeys.nonEmpty && m.bucketCount > 0)
+      Array(Expressions.bucket(m.bucketCount, m.bucketKeys: _*))
     else Array.empty
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ZoneMapScanBuilder(tableName, tableSchema, tdir, entries, options,
-      bucketKeys, bucketCount)
+    new ZoneMapScanBuilder(tableName, tableSchema, tdir, m, options)
 }
 
 /**
  * Push-down order is fixed by `V2ScanRelationPushDown` (filters →
  * aggregates → columns → build), so the inner parquet builder is created
  * lazily at first use: by then the filter step has either run (and shrunk
- * the file list) or was skipped (no filters — nothing to prune).
+ * the file list) or was skipped (no filters — nothing to prune). Routing to
+ * a covering projection is decided at `build()`, once the required columns
+ * and filters are known.
  */
 private[graftglue] class ZoneMapScanBuilder(
     tableName: String, tableSchema: StructType, tdir: java.nio.file.Path,
-    entries: Seq[graft.api.Manifest.FileEntry],
-    options: CaseInsensitiveStringMap,
-    bucketKeys: Seq[String] = Nil, bucketCount: Int = 0)
+    m: graft.api.Manifest.TableManifest,
+    options: CaseInsensitiveStringMap)
     extends ScanBuilder with SupportsPushDownCatalystFilters
     with SupportsPushDownRequiredColumns with SupportsPushDownAggregates {
 
   private[graftglue] def tableDir: java.nio.file.Path = tdir
 
-  private var kept = entries
+  private var kept = m.files
   private var inner: ParquetScanBuilder = _
-  // replay state for runtime re-planning (dynamic partition pruning):
-  // rebuilding the parquet scan over fewer files must repeat exactly the
-  // static pushdown this builder saw
+  // replay state for runtime re-planning (dynamic partition pruning) and
+  // projection routing: a parquet scan built over other files must repeat
+  // exactly the static pushdown this builder saw
   private var savedFilters: Seq[Expression] = Nil
   private var savedRequired: Option[StructType] = None
   private var aggPushed = false
 
-  private[graftglue] def buildOver(files: Seq[graft.api.Manifest.FileEntry])
-      : Scan = {
-    val paths = files.map(f =>
-      graft.api.Table.resolvePath(tdir, f.path)).toList
-    val b = ParquetTable(tableName, SparkSession.active,
-        CaseInsensitiveStringMap.empty(), paths, Some(tableSchema),
+  private def parquetBuilder(paths: Seq[String]): ParquetScanBuilder =
+    ParquetTable(tableName, SparkSession.active,
+        CaseInsensitiveStringMap.empty(), paths.toList, Some(tableSchema),
         classOf[ParquetFileFormat])
       .newScanBuilder(options).asInstanceOf[ParquetScanBuilder]
+
+  /** A parquet scan over `paths` with the saved pushdown replayed. */
+  private def replayOver(paths: Seq[String]): Scan = {
+    val b = parquetBuilder(paths)
     if (savedFilters.nonEmpty) b.pushFilters(savedFilters)
     savedRequired.foreach(b.pruneColumns)
     b.build()
   }
 
+  private[graftglue] def buildOver(files: Seq[graft.api.Manifest.FileEntry])
+      : Scan =
+    replayOver(files.map(f => graft.api.Table.resolvePath(tdir, f.path)))
+
   private def innerB: ParquetScanBuilder = {
-    if (inner == null) {
-      val paths = kept.map(f =>
-        graft.api.Table.resolvePath(tdir, f.path)).toList
-      inner = ParquetTable(tableName, SparkSession.active,
-          CaseInsensitiveStringMap.empty(), paths, Some(tableSchema),
-          classOf[ParquetFileFormat])
-        .newScanBuilder(options).asInstanceOf[ParquetScanBuilder]
-    }
+    if (inner == null)
+      inner = parquetBuilder(
+        kept.map(f => graft.api.Table.resolvePath(tdir, f.path)))
     inner
   }
 
@@ -124,51 +128,19 @@ private[graftglue] class ZoneMapScanBuilder(
         e, supportNestedPredicatePushdown = true))
       val cond = v1.flatMap(GraftFilters.filterToColumn).reduceOption(_ && _)
       cond.foreach(c => kept = graft.api.Table.pruneByZoneMaps(kept, c))
-      pruneByBucket(v1)
+      kept = graft.api.Table.pruneByBucket(kept, tableSchema, m.bucketKeys,
+        m.bucketCount, v1.flatMap(conjuncts).collect {
+          case EqualTo(c, v) if v != null => (c, Seq(v))
+          case In(c, vs) => (c, vs.toSeq)
+        })
     }
     savedFilters = filters
     innerB.pushFilters(filters)
   }
 
-  /**
-   * Bucket pruning — the point-lookup complement of zone maps, which a
-   * hash layout defeats (every bucket file spans the key's whole value
-   * range, so min/max envelopes keep everything): an equality or IN on the
-   * bucket key names exactly the bucket(s) that can hold matches, and at
-   * 100 TB a `WHERE id = x` on a bucketed fact touches 1/n of the files
-   * before a single footer is read. Requires a complete single-key layout
-   * (any post-rewrite DML file has no bucket id → prune nothing); the hash
-   * replicates the write-side assignment (`pmod(murmur3(key), n)`, values
-   * converted to their Catalyst form so strings/timestamps hash as the
-   * column did). Conservative everywhere: only top-level conjuncts, only
-   * the supported shapes, nulls match nothing.
-   */
-  private def pruneByBucket(v1: Seq[Filter]): Unit = {
-    if (bucketKeys.size != 1 || bucketCount <= 0 ||
-        kept.isEmpty || !kept.forall(_.bucket >= 0)) return
-    val key = bucketKeys.head
-    val keyType = tableSchema.fields.find(_.name == key)
-      .map(_.dataType).getOrElse(return)
-    val toCat = org.apache.spark.sql.catalyst.CatalystTypeConverters
-      .createToCatalystConverter(keyType)
-    def bucketOf(v: Any): Int = {
-      val h = org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction
-        .hash(toCat(v), keyType, 42).toInt
-      ((h % bucketCount) + bucketCount) % bucketCount
-    }
-    def conjuncts(f: Filter): Seq[Filter] = f match {
-      case org.apache.spark.sql.sources.And(l, r) =>
-        conjuncts(l) ++ conjuncts(r)
-      case o => Seq(o)
-    }
-    val wanted: Seq[Set[Int]] = v1.flatMap(conjuncts).collect {
-      case org.apache.spark.sql.sources.EqualTo(`key`, v) if v != null =>
-        Set(bucketOf(v))
-      case In(`key`, vs) => vs.filter(_ != null).map(bucketOf).toSet
-    }
-    wanted.reduceOption(_ intersect _).foreach { ws =>
-      kept = kept.filter(f => ws.contains(f.bucket))
-    }
+  private def conjuncts(f: Filter): Seq[Filter] = f match {
+    case And(l, r) => conjuncts(l) ++ conjuncts(r)
+    case o => Seq(o)
   }
 
   override def pushedFilters
@@ -190,12 +162,20 @@ private[graftglue] class ZoneMapScanBuilder(
     innerB.supportCompletePushDown(aggregation)
 
   override def build(): Scan = {
-    val base = innerB.build()
     // an aggregate-pushdown scan emits footer-derived rows; runtime file
     // pruning would silently change its results, so serve it untouched
-    if (aggPushed) base
-    else new ZoneMapRuntimeScan(this, tableName, kept, base,
-      bucketKeys, bucketCount)
+    if (aggPushed) return innerB.build()
+    val filterRoots = savedFilters.flatMap(_.references.map(_.name)).toSet
+    val needed =
+      savedRequired.getOrElse(tableSchema).fieldNames.toSet ++ filterRoots
+    graft.api.Table.coveringProjection(m.projections.filterNot(_.stale),
+        needed, filterRoots) match {
+      // projections hold the same rows as the base, so routing never
+      // changes results; the filters stay post-scan residuals either way
+      case Some(p) => replayOver(Seq(graft.api.Table.resolvePath(tdir, p.dir)))
+      case None => new ZoneMapRuntimeScan(this, tableName, kept, innerB.build(),
+        m.bucketKeys, m.bucketCount)
+    }
   }
 }
 

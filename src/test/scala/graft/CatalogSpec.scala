@@ -936,6 +936,29 @@ class CatalogSpec extends SparkSpec {
     }
   }
 
+  test("a failing update or delete releases its cached batch") {
+    val s = freshSession()
+    s.createBucket("b")
+    s.transaction { tx =>
+      val t = tx.bucket("b").createSchema("m").createTable("t", f1Schema)
+      t.insert(f1Data)
+      // the batch's first materialization (the count) throws
+      val boom = udf((a: Long) => {
+        if (a > 0) throw new IllegalStateException("boom"); a })
+      val badUpdate = t.select(Nil, lit(true), internalRowId = true)
+        .select(col(RowIdColumn), boom(col("a")).as("a"))
+      intercept[Exception] { t.update(badUpdate) }
+      assert(badUpdate.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+        "failed update left its batch cached")
+      val badDelete = t.select(Nil, lit(true), internalRowId = true)
+        .select(col(RowIdColumn), boom(col("a")).as("x"))
+      intercept[Exception] { t.delete(badDelete) }
+      assert(badDelete.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+        "failed delete left its batch cached")
+      assert(t.select().count() == 3)
+    }
+  }
+
   private implicit class SeqRowOps(rows: Seq[Row]) {
     def asJava: java.util.List[Row] = {
       val l = new java.util.ArrayList[Row]()

@@ -228,7 +228,7 @@ class SpjSpec extends SparkSpec {
     assert(spark.sql(pointSql).count() == expect)
     assert(spark.sql("SELECT * FROM graftsp.bk.m.t WHERE k = 123 OR k = 999999")
       .count() == expect) // OR falls through: conservative, still correct
-    // the API scan path prunes the same way (Table.pruneByBucketEq)
+    // the API scan path prunes the same way (Table.pruneByBucket)
     s.transaction { tx =>
       val t = tx.bucket("bk").schema("m").table("t")
       val df = t.select(Seq("k", "v"),
