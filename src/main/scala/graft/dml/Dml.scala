@@ -24,12 +24,14 @@ import graft.types.TypeMapping.RowIdColumn
  */
 object Dml {
 
-  /** UPDATE ... SET assignments WHERE cond, as a pure row transform. */
+  /** UPDATE ... SET assignments WHERE cond, as a pure row transform. SQL
+    * semantics: the condition and every assignment read the PRE-update row,
+    * so one `select` sets all assigned columns at once (Spark evaluates the
+    * shared condition once per row). */
   def updateWhere(df: DataFrame, cond: Column,
                   assignments: Map[String, Column]): DataFrame =
-    assignments.foldLeft(df) { case (d, (c, v)) =>
-      d.withColumn(c, when(cond, v).otherwise(col(c)))
-    }
+    df.select(df.columns.toSeq.map(c => assignments.get(c).fold(col(c))(v =>
+      when(cond, v).otherwise(col(c)).as(c))): _*)
 
   /** DELETE WHERE cond — rows where cond is NULL are kept (SQL semantics). */
   def deleteWhere(df: DataFrame, cond: Column): DataFrame =

@@ -6,21 +6,18 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.StreamingDataSourceV2ScanRelation
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.graftglue.{GroupRoutingFactory, RenameGroups}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.sql.vectorized.ColumnarBatch
 
 import graft.api.Manifest
 
@@ -43,10 +40,10 @@ import graft.api.Manifest
  * `ignoreChanges=true`, which emits the rewritten files (documented
  * at-least-once for rows in rewritten groups, the standard trade). Lazy
  * column RENAMES are served through per-file-group physical→logical name
- * mapping (the same shape the SQL catalog's RenameUnionTable uses for
- * batch), so a stream crosses a rename without restart; only a DROP of a
- * column the stream was started with fails (its data genuinely stops
- * existing in new files).
+ * mapping (the rename-group reader the SQL catalog's scans share,
+ * `graftglue.RenameGroups`), so a stream crosses a rename without restart;
+ * only a DROP of a column the stream was started with fails (its data
+ * genuinely stops existing in new files).
  *
  * Filter pushdown: Spark's micro-batch planner builds streaming scans
  * directly (no V2ScanRelationPushDown pass), so the source registers a tiny
@@ -55,7 +52,7 @@ import graft.api.Manifest
  * conjuncts to the scan; each batch threads them into its delegate parquet
  * scans for row-group/page skipping. The `Filter` node itself is left in
  * the plan — Spark re-evaluates every predicate post-scan, so pushdown is a
- * pruning hint, never a correctness dependency (mirrors RenameUnionTable).
+ * pruning hint, never a correctness dependency (as in the SQL scans).
  *
  * Batch reads through this provider serve the CURRENT manifest's files —
  * `spark.read.format("graft").load(dir)` — with Spark's own parquet scan
@@ -346,13 +343,13 @@ private[graft] class GraftStreamScan(dir: Path, required: StructType,
     * requests its PHYSICAL names in pinned-logical field order, so rows line
     * up positionally with `required` and no per-row projection is needed.
     * Per group, the pinned column's current name resolves to the group's
-    * physical name exactly like the batch rename-union path: a claim ON the
-    * current name by another logical (drop tombstone, renamed-away column)
-    * null-fills via a nonexistent `__absent_` request — dropped bytes never
-    * resurrect. Pushdown filters are re-addressed to each group's physical
+    * physical name exactly like the SQL scans: a claim ON the current name
+    * by another logical (drop tombstone, renamed-away column) null-fills via
+    * a nonexistent `__absent_` request — dropped bytes never resurrect. Pushdown filters are re-addressed to each group's physical
     * names so parquet row-group skipping survives renames. Each partition
-    * carries its group's reader factory — partitions from different
-    * micro-batches (and different rename eras) share one routing factory. */
+    * carries its group's reader factory (`RenameGroups.partitions`) —
+    * partitions from different micro-batches (and different rename eras)
+    * share one routing factory. */
   private def planGroups(files: Seq[Manifest.FileEntry],
                          endM: Manifest.TableManifest,
                          span: String): Array[InputPartition] = {
@@ -381,24 +378,9 @@ private[graft] class GraftStreamScan(dir: Path, required: StructType,
           Manifest.FileEntry.physicalName(renames, curNames(f.name)))
       })
       val physByLogical = required.fieldNames.zip(phys.fieldNames).toMap
-      val translated = pushed.map(_.transform {
-        case a: AttributeReference
-            if physByLogical.get(a.name).exists(_ != a.name) =>
-          a.withName(physByLogical(a.name))
-      })
-      val sb = ParquetTable(s"graft-stream:$dir", SparkSession.active,
-        CaseInsensitiveStringMap.empty(),
-        group.map(f => graft.api.Table.resolvePath(dir, f.path)).toList,
-        Some(phys), classOf[ParquetFileFormat])
-        .newScanBuilder(CaseInsensitiveStringMap.empty())
-      sb match {
-        case pf: org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
-            if translated.nonEmpty => pf.pushFilters(translated)
-        case _ => ()
-      }
-      val batch = sb.build().toBatch
-      val factory = batch.createReaderFactory()
-      batch.planInputPartitions().map(p => StreamGroupPartition(p, factory))
+      RenameGroups.partitions(RenameGroups.scan(s"graft-stream:$dir",
+        group.map(f => graft.api.Table.resolvePath(dir, f.path)), phys,
+        pushed, n => physByLogical.getOrElse(n, n)))
     }.toArray
   }
 
@@ -461,7 +443,7 @@ private[graft] class GraftStreamScan(dir: Path, required: StructType,
       override def planInputPartitions(): Array[InputPartition] =
         planGroups(files, endM, s"v$s..v$e")
       override def createReaderFactory(): PartitionReaderFactory =
-        new StreamGroupRoutingFactory
+        GroupRoutingFactory
     }
   }
 
@@ -595,29 +577,9 @@ private[graft] class GraftStreamScan(dir: Path, required: StructType,
         * per rename group and per batch), so the stream-level factory is a
         * pure router. */
       override def createReaderFactory(): PartitionReaderFactory =
-        new StreamGroupRoutingFactory
+        GroupRoutingFactory
     }
   }
-}
-
-/** An input partition bundled with the reader factory of the rename group
-  * (and filter set) it was planned under — lets one stream-level routing
-  * factory serve partitions whose physical schemas differ. */
-private[graft] case class StreamGroupPartition(
-    inner: InputPartition, factory: PartitionReaderFactory)
-    extends InputPartition {
-  override def preferredLocations(): Array[String] = inner.preferredLocations()
-}
-
-private[graft] class StreamGroupRoutingFactory extends PartitionReaderFactory {
-  private def part(p: InputPartition): StreamGroupPartition =
-    p.asInstanceOf[StreamGroupPartition]
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    part(p).factory.createReader(part(p).inner)
-  override def createColumnarReader(p: InputPartition): PartitionReader[ColumnarBatch] =
-    part(p).factory.createColumnarReader(part(p).inner)
-  override def supportColumnarReads(p: InputPartition): Boolean =
-    part(p).factory.supportColumnarReads(part(p).inner)
 }
 
 /**

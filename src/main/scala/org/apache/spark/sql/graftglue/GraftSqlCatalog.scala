@@ -31,12 +31,13 @@ import graft.api.Manifest
  *   spark.sql("SELECT * FROM graft.bucket.schema.table WHERE ...")
  *
  * Reads resolve the table's CURRENT manifest and delegate scanning to
- * Spark's own ParquetTable (full pushdown/pruning/vectorization). Tables
- * carrying lazy per-file renames are served by [[RenameUnionTable]]
- * (per-rename-group parquet scans, unioned positionally), matching the
- * reference's transparent rename semantics. SQL INSERT appends through the
- * transactional manifest commit ([[GraftV1Writable]]); DDL and
- * namespace/table mutation stay API-only so manifests remain authoritative.
+ * Spark's own ParquetTable (full pushdown/pruning/vectorization) through
+ * one table class, [[ZoneMapTable]]; files carrying lazy per-file renames
+ * are read per rename group ([[RenameGroups]]), matching the reference's
+ * transparent rename semantics, and keep every file-pruning layer. SQL
+ * INSERT appends through the transactional manifest commit
+ * ([[GraftV1Writable]]); DDL and namespace/table mutation stay API-only so
+ * manifests remain authoritative.
  */
 class GraftSqlCatalog extends TableCatalog with SupportsNamespaces
     with ProcedureCatalog with FunctionCatalog {
@@ -187,38 +188,25 @@ class GraftSqlCatalog extends TableCatalog with SupportsNamespaces
     // manifests store table-dir-relative data paths (so staged renames can
     // move the dir atomically); Table.resolvePath is the shared resolver —
     // it also redirects snapshot manifest trees to the original data dirs
-    // fresh ROLLUPS ride along on every table shape for
-    // AggProjectionRewrite — registered here (idempotent) so any session
-    // that can see a rollup also carries the rule that routes to it. A
-    // rollup rebuilt after a rename is rename-free, so even the
-    // rename-union shape routes covered aggregates.
+    // fresh ROLLUPS ride along for AggProjectionRewrite — registered here
+    // (idempotent) so any session that can see a rollup also carries the
+    // rule that routes to it. A rollup rebuilt after a rename is
+    // rename-free, so rename-evolved tables route covered aggregates too.
     val rollups = m.aggProjections.filterNot(_.stale).map(p =>
       (p, graft.api.Table.resolvePath(dir, p.dir)))
     if (rollups.nonEmpty)
       org.apache.spark.sql.SparkSession.getActiveSession
         .foreach(AggProjectionRewrite.register)
-    if (m.files.exists(_.renames.nonEmpty)) {
-      // rename-evolved: per-rename-group parquet scans unioned positionally
-      val groups = m.files.groupBy(_.renames).toSeq.map { case (ren, fs) =>
-        (ren, fs.map(f => graft.api.Table.resolvePath(dir, f.path)))
-      }
-      if (writable)
-        new RenameUnionTable(ident.toString, schema, groups, rollups)
-          with GraftV1Writable with GraftTableProps {
-            val writeRoot = root; val writeIdent = ident; val tableProps = m.props }
-      else new RenameUnionTable(ident.toString, schema, groups, rollups)
-        with GraftTableProps { val tableProps = m.props }
-    } else {
-      // rename-free: the zone-map table prunes whole FILES from pushed
-      // filters before parquet ever opens them, and routes scans a fresh
-      // projection covers to it (like the picker in Table.select)
-      if (writable)
-        new ZoneMapTable(ident.toString, schema, dir, m, rollups)
-          with GraftV1Writable with GraftTableProps {
-            val writeRoot = root; val writeIdent = ident; val tableProps = m.props }
-      else new ZoneMapTable(ident.toString, schema, dir, m, rollups)
-        with GraftTableProps { val tableProps = m.props }
-    }
+    // the zone-map table prunes whole FILES from pushed filters before
+    // parquet ever opens them, reads rename-evolved files per rename group,
+    // and routes scans a fresh projection covers to it (like the picker in
+    // Table.select)
+    if (writable)
+      new ZoneMapTable(ident.toString, schema, dir, m, rollups)
+        with GraftV1Writable with GraftTableProps {
+          val writeRoot = root; val writeIdent = ident; val tableProps = m.props }
+    else new ZoneMapTable(ident.toString, schema, dir, m, rollups)
+      with GraftTableProps { val tableProps = m.props }
   }
 
   /** SQL CREATE TABLE / CTAS through the transactional API. Returns a table
@@ -1717,10 +1705,7 @@ private[graftglue] trait GraftV1Writable extends Table with SupportsWrite
     import org.apache.spark.sql.functions.lit
     val pred = filters.flatMap(filterToColumn)
       .foldLeft(lit(true))(_ && _)
-    inTx { t =>
-      val victims = t.select(Nil, pred, internalRowId = true).select("_row_id")
-      t.delete(victims)
-    }
+    inTx(_.deleteWhere(pred))
   }
 
   abstract override def capabilities(): util.Set[TableCapability] = {
@@ -1881,19 +1866,11 @@ private[graftglue] class GraftGroupCowOperation(
 
       override def pushedFilters(): Array[Filter] = Array.empty
 
-      override def build(): Scan = {
-        val paths = scanned.map(f => graft.api.Table.resolvePath(tdir, f.path)).toList
-        val delegate: Table with SupportsRead =
-          if (manifest.files.exists(_.renames.nonEmpty)) {
-            val groups = scanned.groupBy(_.renames).toSeq.map { case (ren, fs) =>
-              (ren, fs.map(f => graft.api.Table.resolvePath(tdir, f.path)))
-            }
-            new RenameUnionTable(ident.toString, schemaWithId, groups)
-          } else new ReadOnlyTable(ParquetTable(ident.toString,
-            SparkSession.active, CaseInsensitiveStringMap.empty(), paths,
-            Some(schemaWithId), classOf[ParquetFileFormat]))
-        delegate.newScanBuilder(CaseInsensitiveStringMap.empty()).build()
-      }
+      // a plain (or rename-group) scan of exactly the scanned files — never
+      // a runtime-filtering one: a file pruned at runtime would be neither
+      // rewritten nor kept by the commit, and its rows would be lost
+      override def build(): Scan = RenameGroups.builder(ident.toString,
+        schemaWithId, tdir, scanned, CaseInsensitiveStringMap.empty()).build()
     }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =

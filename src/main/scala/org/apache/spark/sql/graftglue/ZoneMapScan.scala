@@ -2,7 +2,6 @@ package org.apache.spark.sql.graftglue
 
 import java.util
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
@@ -17,8 +16,6 @@ import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey,
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning,
   Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.execution.datasources.{DataSourceStrategy, FilePartition}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScanBuilder, ParquetTable}
 import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
 import org.apache.spark.sql.sources.{And, EqualTo, Filter, In}
 import org.apache.spark.sql.types.StructType
@@ -26,9 +23,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
 /**
- * The SQL table of every rename-free manifest, with manifest zone-map FILE
- * pruning: the scan builder intercepts pushed filters, drops whole files
- * whose per-column min/max envelopes cannot match
+ * The SQL table of every manifest, with manifest zone-map FILE pruning: the
+ * scan builder intercepts pushed filters, drops whole files whose
+ * per-column min/max envelopes cannot match
  * (`graft.api.Table.pruneByZoneMaps` — the same pruning the API scan
  * applies in `Table.select`), and only then hands off to Spark's own
  * parquet builder over the kept paths. Parquet row-group pruning still
@@ -42,9 +39,11 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
  * A scan that a FRESH projection covers reads the projection instead (the
  * reference server's transparent projection selection,
  * vastdb/tests/test_projections.py:102-125); every other scan keeps all
- * pruning layers — a projection never switches them off.
- *
- * Rename-evolved manifests are served by [[RenameUnionTable]].
+ * pruning layers — a projection never switches them off. Nor does a lazy
+ * rename (the reference's transparent rename, vastdb/table.py:1010-1038):
+ * when a kept file carries a rename map, the kept files are read per
+ * rename group ([[RenameGroups]]), and zone-map stats are looked up
+ * through `FileEntry.physicalName`.
  */
 private[graftglue] class ZoneMapTable(
     tableName: String, tableSchema: StructType, tdir: java.nio.file.Path,
@@ -69,9 +68,11 @@ private[graftglue] class ZoneMapTable(
 
 /**
  * Push-down order is fixed by `V2ScanRelationPushDown` (filters →
- * aggregates → columns → build), so the inner parquet builder is created
- * lazily at first use: by then the filter step has either run (and shrunk
- * the file list) or was skipped (no filters — nothing to prune). Routing to
+ * aggregates → columns → build), so the inner builder is created lazily at
+ * first use: by then the filter step has either run (and shrunk the file
+ * list) or was skipped (no filters — nothing to prune). It is Spark's plain
+ * parquet builder when every kept file is rename-free, else the
+ * rename-group builder ([[RenameGroups.builder]]). Routing to
  * a covering projection is decided at `build()`, once the required columns
  * and filters are known.
  */
@@ -85,7 +86,7 @@ private[graftglue] class ZoneMapScanBuilder(
   private[graftglue] def tableDir: java.nio.file.Path = tdir
 
   private var kept = m.files
-  private var inner: ParquetScanBuilder = _
+  private var inner: RenameGroups.GroupableBuilder = _
   // replay state for runtime re-planning (dynamic partition pruning) and
   // projection routing: a parquet scan built over other files must repeat
   // exactly the static pushdown this builder saw
@@ -93,28 +94,21 @@ private[graftglue] class ZoneMapScanBuilder(
   private var savedRequired: Option[StructType] = None
   private var aggPushed = false
 
-  private def parquetBuilder(paths: Seq[String]): ParquetScanBuilder =
-    ParquetTable(tableName, SparkSession.active,
-        CaseInsensitiveStringMap.empty(), paths.toList, Some(tableSchema),
-        classOf[ParquetFileFormat])
-      .newScanBuilder(options).asInstanceOf[ParquetScanBuilder]
+  private def builderOver(files: Seq[graft.api.Manifest.FileEntry]) =
+    RenameGroups.builder(tableName, tableSchema, tdir, files, options)
 
-  /** A parquet scan over `paths` with the saved pushdown replayed. */
-  private def replayOver(paths: Seq[String]): Scan = {
-    val b = parquetBuilder(paths)
+  /** `b` with the saved pushdown replayed, built. */
+  private def replay(b: RenameGroups.GroupableBuilder): Scan = {
     if (savedFilters.nonEmpty) b.pushFilters(savedFilters)
     savedRequired.foreach(b.pruneColumns)
     b.build()
   }
 
   private[graftglue] def buildOver(files: Seq[graft.api.Manifest.FileEntry])
-      : Scan =
-    replayOver(files.map(f => graft.api.Table.resolvePath(tdir, f.path)))
+      : Scan = replay(builderOver(files))
 
-  private def innerB: ParquetScanBuilder = {
-    if (inner == null)
-      inner = parquetBuilder(
-        kept.map(f => graft.api.Table.resolvePath(tdir, f.path)))
+  private def innerB: RenameGroups.GroupableBuilder = {
+    if (inner == null) inner = builderOver(kept)
     inner
   }
 
@@ -152,14 +146,22 @@ private[graftglue] class ZoneMapScanBuilder(
     innerB.pruneColumns(requiredSchema)
   }
 
+  // only the plain parquet builder pushes aggregates: over rename groups,
+  // footer aggregates would name physical columns
   override def pushAggregation(aggregation: Aggregation): Boolean = {
-    val pushed = innerB.pushAggregation(aggregation)
+    val pushed = innerB match {
+      case p: SupportsPushDownAggregates => p.pushAggregation(aggregation)
+      case _ => false
+    }
     aggPushed ||= pushed
     pushed
   }
 
   override def supportCompletePushDown(aggregation: Aggregation): Boolean =
-    innerB.supportCompletePushDown(aggregation)
+    innerB match {
+      case p: SupportsPushDownAggregates => p.supportCompletePushDown(aggregation)
+      case _ => false
+    }
 
   override def build(): Scan = {
     // an aggregate-pushdown scan emits footer-derived rows; runtime file
@@ -172,7 +174,8 @@ private[graftglue] class ZoneMapScanBuilder(
         needed, filterRoots) match {
       // projections hold the same rows as the base, so routing never
       // changes results; the filters stay post-scan residuals either way
-      case Some(p) => replayOver(Seq(graft.api.Table.resolvePath(tdir, p.dir)))
+      case Some(p) => replay(RenameGroups.parquet(tableName, tableSchema,
+        Seq(graft.api.Table.resolvePath(tdir, p.dir)), options))
       case None => new ZoneMapRuntimeScan(this, tableName, kept, innerB.build(),
         m.bucketKeys, m.bucketCount)
     }
@@ -192,10 +195,11 @@ private[graftglue] class ZoneMapScanBuilder(
  * per-value (`Table.pruneByInSet`), not by collapsing the key set to an
  * envelope — scattered surviving keys keep ~|keys| files, not a range.
  *
- * The wrapper delegates everything else to the inner parquet scan and
- * REBUILDS it over the reduced file list when a runtime filter lands
- * (`buildOver` replays the static pushdown, so pushed filters and pruned
- * columns survive re-planning). `toBatch` resolves through the CURRENT
+ * The wrapper delegates everything else to the inner scan (parquet, or
+ * one parquet scan per rename group) and REBUILDS it over the reduced file
+ * list when a runtime filter lands (`buildOver` regroups the files and
+ * replays the static pushdown, so pushed filters and pruned columns survive
+ * re-planning). `toBatch` resolves through the CURRENT
  * inner scan on every call: `BatchScanExec` may cache the Batch object
  * before runtime filters arrive and re-plan partitions on it afterwards.
  */
@@ -220,15 +224,16 @@ class ZoneMapRuntimeScan private[graftglue] (
    * runtime filtering to preserve the partition-key set of a key-grouped
    * scan, so a runtime prune empties a bucket's group rather than dropping
    * it. None unless the table has a complete bucket layout (every kept file
-   * carries a bucket id — any post-rewrite DML degrades to plain scanning),
-   * there is at least one file, and the session has storage-partitioned
+   * carries a bucket id — any post-rewrite DML degrades to plain scanning —
+   * and none carries a rename map: the regrouping below re-bins plain
+   * parquet splits), there is at least one file, and the session has storage-partitioned
    * joins switched on (`spark.sql.sources.v2.bucketing.enabled`) — when
    * off, partition planning stays the parquet default (size-based splits),
    * so the feature is strictly opt-in.
    */
   private val bucketGroups: Option[Seq[Int]] =
     if (bucketKeys.nonEmpty && bucketCount > 0 && initialKept.nonEmpty &&
-        initialKept.forall(_.bucket >= 0) &&
+        initialKept.forall(f => f.bucket >= 0 && f.renames.isEmpty) &&
         org.apache.spark.sql.internal.SQLConf.get.v2BucketingEnabled)
       Some(initialKept.map(_.bucket).distinct.sorted)
     else None
@@ -287,11 +292,10 @@ class ZoneMapRuntimeScan private[graftglue] (
     // restricted to the READ schema: the planner resolves these refs
     // against the column-pruned relation output and THROWS on any column
     // the scan no longer outputs (a join key is always read, so this never
-    // hides a pruning opportunity).
-    val readable = readSchema().fieldNames.toSet
-    val stats = kept.iterator.flatMap(_.colStats.keysIterator)
-      .filter(readable).toSet
-    stats.toArray.sorted.map(FieldReference.column)
+    // hides a pruning opportunity). Stats are keyed by physical name.
+    readSchema().fieldNames.distinct.sorted
+      .filter(c => kept.exists(f => f.colStats.contains(f.physicalName(c))))
+      .map(FieldReference.column)
   }
 
   override def filter(filters: Array[Filter]): Unit = {
@@ -304,7 +308,6 @@ class ZoneMapRuntimeScan private[graftglue] (
           kept = graft.api.Table.pruneByZoneMaps(kept, c))
     }
     runtimePruned = Some((before, kept.size))
-    ZoneMapRuntimeScan.lastRuntimePrune.set((tableName, before, kept.size))
     if (kept.size < before) inner = builder.buildOver(kept)
   }
 
@@ -371,13 +374,6 @@ class ZoneMapRuntimeScan private[graftglue] (
   override def reportDriverMetrics()
       : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
     inner.reportDriverMetrics()
-}
-
-private[graftglue] object ZoneMapRuntimeScan {
-  /** (table, files-before, files-after) of the most recent runtime prune —
-    * observability hook for specs and plan debugging. */
-  private[graftglue] val lastRuntimePrune =
-    new java.util.concurrent.atomic.AtomicReference[(String, Int, Int)]
 }
 
 /**

@@ -341,8 +341,8 @@ class AggProjectionSpec extends SparkSpec {
     s.transaction { tx =>
       tx.bucket("bk").schema("m").table("fact").refreshAggProjection("by_fs")
     }
-    // the table is rename-evolved (RenameUnionTable) but the rebuilt rollup
-    // is rename-free: covered aggregates route and agree
+    // the table's files are rename-evolved (read per rename group) but the
+    // rebuilt rollup is rename-free: covered aggregates route and agree
     parity(s"SELECT category, sum(qty) AS sq, count(*) AS n" +
       s" FROM $cat.bk.m.fact GROUP BY category", expectRoute = true)
     // restore the original name for any later test

@@ -13,10 +13,10 @@ import graft.api._
   * makes Spark assume `defaultSizeInBytes` (~Long.Max) for the relation,
   * so a tiny dim table silently stops broadcasting — plans degrade to
   * sort-merge joins and broadcast-reuse DPP dies with them (the round-8
-  * regression). Pin static broadcast planning through both catalog table
-  * classes and all three scan shapes: plain and projection-routed
-  * (ZoneMapTable; a covered scan reads the projection's files), and
-  * rename-evolved (RenameUnionTable). */
+  * regression). Pin static broadcast planning through the catalog table
+  * class (ZoneMapTable) and all three scan shapes: plain, projection-routed
+  * (a covered scan reads the projection's files) and rename-evolved (the
+  * kept files are read per rename group). */
 class BroadcastStatsSpec extends SparkSpec {
 
   private val factSchema = StructType(Seq(

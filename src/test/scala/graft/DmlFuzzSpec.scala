@@ -106,4 +106,15 @@ class DmlFuzzSpec extends SparkSpec {
       assert(t.select(Seq("v"), col("v") === -1L).count() == 2)
     }
   }
+
+  test("Dml.updateWhere: the condition and every assignment read the pre-update row") {
+    val ab = StructType(Seq(StructField("a", LongType), StructField("b", LongType)))
+    val df = spark.createDataFrame(java.util.List.of(Row(5L, 0L), Row(0L, 0L)), ab)
+    // SQL: UPDATE … SET a = 0, b = a + 100 WHERE a > 1 — b sees the old a,
+    // and the already-zeroed a must not switch the condition off for b
+    val got = graft.dml.Dml.updateWhere(df, col("a") > 1L,
+      scala.collection.immutable.ListMap("a" -> lit(0L), "b" -> (col("a") + 100L)))
+    assert(got.columns.toSeq == Seq("a", "b"))
+    assert(got.collect().toSeq == Seq(Row(0L, 105L), Row(0L, 0L)))
+  }
 }

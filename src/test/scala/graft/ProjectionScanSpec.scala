@@ -10,7 +10,9 @@ import graft.api._
 /** A fresh projection on a table changes which files a COVERED SQL scan
   * reads and nothing else: scans the projection does not cover keep every
   * pruning layer of the plain table — static zone-map file pruning and
-  * runtime (join-key) file pruning alike. */
+  * runtime (join-key) file pruning alike. A lazy rename of the key column
+  * (files keep their physical name, zone maps stay keyed by it) keeps them
+  * too. */
 class ProjectionScanSpec extends SparkSpec {
 
   private val schema = StructType(Seq(
@@ -39,6 +41,15 @@ class ProjectionScanSpec extends SparkSpec {
     (s, cat)
   }
 
+  /** A point lookup on `key` of a 4-file range table plans one file. */
+  private def assertPrunedToOne(cat: String, key: String): Unit = {
+    val df = spark.sql(s"SELECT $key, s FROM $cat.bk.m.t WHERE $key = 2005")
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("ZoneMap(1 files)"), s"no file pruning:\n$plan")
+    assert(!plan.contains("_proj/"), s"projection served an uncovered scan:\n$plan")
+    assert(df.collect().toSeq == Seq(Row(2005L, "r2-5")))
+  }
+
   test("an uncovered SQL scan of a projection-bearing table prunes by zone maps") {
     val (s, cat) = rangeTable("zm", files = 4, rows = 10)
     s.transaction { tx =>
@@ -46,39 +57,44 @@ class ProjectionScanSpec extends SparkSpec {
         .createProjection("pa", Seq("a"), Seq("a"))
     }
     // `s` is not in the projection: the base files serve, pruned to one
-    val uncovered = spark.sql(s"SELECT a, s FROM $cat.bk.m.t WHERE a = 2005")
-    val plan = uncovered.queryExecution.executedPlan.toString
-    assert(plan.contains("ZoneMap(1 files)"), s"no file pruning:\n$plan")
-    assert(!plan.contains("_proj/"), s"projection served an uncovered scan:\n$plan")
-    assert(uncovered.collect().toSeq == Seq(Row(2005L, "r2-5")))
+    assertPrunedToOne(cat, "a")
     // a covered scan still reads the projection
     val covered = spark.sql(s"SELECT a FROM $cat.bk.m.t WHERE a = 2005")
     val cplan = covered.queryExecution.executedPlan.toString
     assert(cplan.contains("_proj/pa-"), s"projection not routed:\n$cplan")
     assert(covered.collect().toSeq == Seq(Row(2005L)))
+    // a renamed key prunes through the files' physical-name zone maps
+    val (rs, rcat) = rangeTable("zmrename", files = 4, rows = 10)
+    rs.transaction(_.bucket("bk").schema("m").table("t").renameColumn("a", "k"))
+    assertPrunedToOne(rcat, "k")
   }
 
   test("a star join over a projection-bearing fact still runtime-prunes fact files") {
-    val (s, cat) = rangeTable("dpp", files = 8, rows = 20)
-    val dimSchema = StructType(Seq(
-      StructField("a", LongType), StructField("attr", StringType)))
-    s.transaction { tx =>
-      val m = tx.bucket("bk").schema("m")
-      m.table("t").createProjection("pa", Seq("a"), Seq("a"))
-      val l = new java.util.ArrayList[Row]()
-      // one dim key per fact file; only the keys in files 1 and 6 survive
-      (0 until 8).foreach(i => l.add(
-        Row(i * 1000L + 5L, if (i == 1 || i == 6) "pick" else "skip")))
-      m.createTable("dim", dimSchema).insert(spark.createDataFrame(l, dimSchema))
+    val evolutions: Seq[(String, Table => String)] = Seq(
+      "projection" -> { t => t.createProjection("pa", Seq("a"), Seq("a")); "a" },
+      "rename" -> { t => t.renameColumn("a", "k"); "k" })
+    for ((name, evolve) <- evolutions) {
+      val (s, cat) = rangeTable(s"dpp$name", files = 8, rows = 20)
+      val dimSchema = StructType(Seq(
+        StructField("a", LongType), StructField("attr", StringType)))
+      val key = s.transaction { tx =>
+        val m = tx.bucket("bk").schema("m")
+        val l = new java.util.ArrayList[Row]()
+        // one dim key per fact file; only the keys in files 1 and 6 survive
+        (0 until 8).foreach(i => l.add(
+          Row(i * 1000L + 5L, if (i == 1 || i == 6) "pick" else "skip")))
+        m.createTable("dim", dimSchema).insert(spark.createDataFrame(l, dimSchema))
+        evolve(m.table("t"))
+      }
+      val df = spark.sql(
+        s"""SELECT f.$key, f.s FROM $cat.bk.m.t f
+           |JOIN $cat.bk.m.dim d ON f.$key = d.a
+           |WHERE d.attr = 'pick' ORDER BY f.$key""".stripMargin)
+      assert(df.collect().toSeq == Seq(Row(1005L, "r1-5"), Row(6005L, "r6-5")))
+      val plan = df.queryExecution.executedPlan.toString
+      val pruned = "runtime-pruned (\\d+)->(\\d+) files".r.findFirstMatchIn(plan)
+      assert(pruned.map(m => (m.group(1), m.group(2))).contains(("8", "2")),
+        s"$name: fact files not runtime-pruned 8->2:\n$plan")
     }
-    val df = spark.sql(
-      s"""SELECT f.a, f.s FROM $cat.bk.m.t f
-         |JOIN $cat.bk.m.dim d ON f.a = d.a
-         |WHERE d.attr = 'pick' ORDER BY f.a""".stripMargin)
-    assert(df.collect().toSeq == Seq(Row(1005L, "r1-5"), Row(6005L, "r6-5")))
-    val plan = df.queryExecution.executedPlan.toString
-    val pruned = "runtime-pruned (\\d+)->(\\d+) files".r.findFirstMatchIn(plan)
-    assert(pruned.map(m => (m.group(1), m.group(2))).contains(("8", "2")),
-      s"fact files not runtime-pruned 8->2:\n$plan")
   }
 }

@@ -339,6 +339,24 @@ class SpjSpec extends SparkSpec {
       assert(t.manifest.bucketKeys == Seq("key"),
         "bucket keys must follow a column rename")
     }
+    // SQL reads the renamed files per rename group with storage-partitioned
+    // joins on: no key-grouped partitioning is offered, the rows are exact
+    spark.conf.set("spark.sql.catalog.graftr",
+      "org.apache.spark.sql.graftglue.GraftSqlCatalog")
+    spark.conf.set("spark.sql.catalog.graftr.root", root)
+    val rows = (0 until 300).map(i => (((i * 2654435761L + 2) % 997).abs, i + 2.0))
+    val saved = spark.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
+    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+    try {
+      val got = spark.sql("SELECT key, v FROM graftr.bk.m.t WHERE key < 100")
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).sorted.toSeq
+      assert(got == rows.filter(_._1 < 100).sorted)
+      val k = rows.head._1
+      assert(spark.sql(s"SELECT count(*) FROM graftr.bk.m.t WHERE key = $k")
+        .head.getLong(0) == rows.count(_._1 == k))
+    } finally saved.fold(
+      spark.conf.unset("spark.sql.sources.v2.bucketing.enabled"))(
+      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", _))
     s.transaction { tx =>
       val t = tx.bucket("bk").schema("m").table("t")
       t.dropColumn("key")
