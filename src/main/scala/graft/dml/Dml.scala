@@ -27,11 +27,24 @@ object Dml {
   /** UPDATE ... SET assignments WHERE cond, as a pure row transform. SQL
     * semantics: the condition and every assignment read the PRE-update row,
     * so one `select` sets all assigned columns at once (Spark evaluates the
-    * shared condition once per row). */
+    * shared condition once per row). An assignment key names a column of
+    * `df` under the session's case sensitivity; a key naming no column, or
+    * a column another key already names, is an error. */
   def updateWhere(df: DataFrame, cond: Column,
-                  assignments: Map[String, Column]): DataFrame =
-    df.select(df.columns.toSeq.map(c => assignments.get(c).fold(col(c))(v =>
-      when(cond, v).otherwise(col(c)).as(c))): _*)
+                  assignments: Map[String, Column]): DataFrame = {
+    val resolver = org.apache.spark.sql.internal.SQLConf.get.resolver
+    val byCol = assignments.map { case (k, v) =>
+      df.columns.find(resolver(_, k)).getOrElse(throw new IllegalArgumentException(
+        s"UPDATE assigns unknown column $k (columns: ${df.columns.mkString(", ")})")) -> v
+    }
+    require(byCol.size == assignments.size,
+      s"UPDATE assigns a column twice: ${assignments.keys.mkString(", ")}")
+    // backticks: a column name may hold dots
+    df.select(df.columns.toSeq.map { c =>
+      val old = df.col("`" + c.replace("`", "``") + "`")
+      byCol.get(c).fold(old)(v => when(cond, v).otherwise(old).as(c))
+    }: _*)
+  }
 
   /** DELETE WHERE cond — rows where cond is NULL are kept (SQL semantics). */
   def deleteWhere(df: DataFrame, cond: Column): DataFrame =

@@ -57,13 +57,6 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
  * (DML stales rollups under the same manifest CAS as projections), so a
  * routed answer is exactly the base-table answer.
  */
-/** Implemented by every catalog table shape that can carry FRESH rollups
-  * for [[AggProjectionRewrite]]: (meta, resolved data dir) pairs. */
-private[graftglue] trait HasAggRollups {
-  def aggRollups: Seq[(graft.api.Manifest.AggProjectionMeta, String)]
-  def name(): String
-}
-
 object AggProjectionRewrite extends Rule[LogicalPlan] {
 
   /** (table, rollup) of the most recent route — observability for specs. */
@@ -146,7 +139,7 @@ object AggProjectionRewrite extends Rule[LogicalPlan] {
       case None => return None
     }
     val zt = sr.relation.table match {
-      case z: HasAggRollups if z.aggRollups.nonEmpty => z
+      case z: ZoneMapTable if z.aggRollups.nonEmpty => z
       case _ => return None
     }
     // grouping must be plain columns (for the Expand shape: its output

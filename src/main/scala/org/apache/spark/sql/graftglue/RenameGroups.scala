@@ -67,14 +67,15 @@ object RenameGroups {
   }
 
   /** The SQL scan builder over `files` of a table with logical `schema`:
-    * Spark's plain parquet builder when every file is rename-free, else a
-    * [[RenameGroupScanBuilder]]. */
+    * Spark's plain parquet builder when every file is rename-free and
+    * `grouped` is off, else a [[RenameGroupScanBuilder]]. */
   private[graftglue] def builder(name: String, schema: StructType,
       tdir: java.nio.file.Path, files: Seq[FileEntry],
-      options: CaseInsensitiveStringMap): GroupableBuilder = {
+      options: CaseInsensitiveStringMap,
+      grouped: Boolean = false): GroupableBuilder = {
     val paths = (fs: Seq[FileEntry]) =>
       fs.map(f => graft.api.Table.resolvePath(tdir, f.path))
-    if (files.forall(_.renames.isEmpty))
+    if (!grouped && files.forall(_.renames.isEmpty))
       parquet(name, schema, paths(files), options)
     else new RenameGroupScanBuilder(name, schema,
       files.groupBy(_.renames).toSeq.map { case (r, fs) => (r, paths(fs)) },

@@ -51,7 +51,7 @@ private[graftglue] class ZoneMapTable(
     // FRESH rollups only (stale ones are excluded at loadTable):
     // (meta, resolved data dir) for AggProjectionRewrite
     val aggRollups: Seq[(graft.api.Manifest.AggProjectionMeta, String)] = Nil)
-    extends Table with SupportsRead with HasAggRollups {
+    extends Table with SupportsRead {
   override def name(): String = tableName
   override def schema(): StructType = tableSchema
   override def capabilities(): util.Set[TableCapability] =
@@ -94,8 +94,9 @@ private[graftglue] class ZoneMapScanBuilder(
   private var savedRequired: Option[StructType] = None
   private var aggPushed = false
 
-  private def builderOver(files: Seq[graft.api.Manifest.FileEntry]) =
-    RenameGroups.builder(tableName, tableSchema, tdir, files, options)
+  private def builderOver(files: Seq[graft.api.Manifest.FileEntry],
+                          grouped: Boolean = false) =
+    RenameGroups.builder(tableName, tableSchema, tdir, files, options, grouped)
 
   /** `b` with the saved pushdown replayed, built. */
   private def replay(b: RenameGroups.GroupableBuilder): Scan = {
@@ -104,8 +105,13 @@ private[graftglue] class ZoneMapScanBuilder(
     b.build()
   }
 
+  /** The static scan rebuilt over runtime-kept `files`. It stays grouped
+    * when the static scan was, even if only rename-free files are left:
+    * `BatchScanExec` caches the static reader factory at planning, and
+    * the group routing factory reads only group partitions. */
   private[graftglue] def buildOver(files: Seq[graft.api.Manifest.FileEntry])
-      : Scan = replay(builderOver(files))
+      : Scan = replay(builderOver(files,
+        grouped = inner.isInstanceOf[RenameGroupScanBuilder]))
 
   private def innerB: RenameGroups.GroupableBuilder = {
     if (inner == null) inner = builderOver(kept)

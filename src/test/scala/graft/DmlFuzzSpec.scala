@@ -116,5 +116,14 @@ class DmlFuzzSpec extends SparkSpec {
       scala.collection.immutable.ListMap("a" -> lit(0L), "b" -> (col("a") + 100L)))
     assert(got.columns.toSeq == Seq("a", "b"))
     assert(got.collect().toSeq == Seq(Row(0L, 105L), Row(0L, 0L)))
+    // a key resolves like a SQL column name (case-insensitive by default,
+    // dots literal); a key naming no column is an error, never a no-op
+    val dotted = df.withColumnRenamed("b", "x.y")
+    val upper = graft.dml.Dml.updateWhere(dotted, col("a") > 1L,
+      Map("X.Y" -> lit(7L)))
+    assert(upper.columns.toSeq == Seq("a", "x.y"))
+    assert(upper.collect().toSeq == Seq(Row(5L, 7L), Row(0L, 0L)))
+    intercept[IllegalArgumentException](
+      graft.dml.Dml.updateWhere(df, col("a") > 1L, Map("c" -> lit(1L))))
   }
 }

@@ -70,19 +70,32 @@ class ProjectionScanSpec extends SparkSpec {
   }
 
   test("a star join over a projection-bearing fact still runtime-prunes fact files") {
-    val evolutions: Seq[(String, Table => String)] = Seq(
-      "projection" -> { t => t.createProjection("pa", Seq("a"), Seq("a")); "a" },
-      "rename" -> { t => t.renameColumn("a", "k"); "k" })
-    for ((name, evolve) <- evolutions) {
+    // (name, evolution of the 8-file fact returning its key column, the
+    // fact files whose dim keys are picked, the fact's file count after)
+    val evolutions: Seq[(String, Table => String, Seq[Int], Int)] = Seq(
+      ("projection",
+        { t => t.createProjection("pa", Seq("a"), Seq("a")); "a" }, Seq(1, 6), 8),
+      ("rename", { t => t.renameColumn("a", "k"); "k" }, Seq(1, 6), 8),
+      // file 8, written after the rename, is rename-free: a runtime prune
+      // down to it alone must still read through the static plan's groups
+      ("renameinsert", { t =>
+        t.renameColumn("a", "k")
+        val l = new java.util.ArrayList[Row]()
+        (0 until 20).foreach(j => l.add(Row(8000L + j, s"r8-$j")))
+        t.insert(spark.createDataFrame(l, t.schema).repartition(1))
+        "k"
+      }, Seq(8), 9))
+    for ((name, evolve, picks, files) <- evolutions) {
       val (s, cat) = rangeTable(s"dpp$name", files = 8, rows = 20)
       val dimSchema = StructType(Seq(
         StructField("a", LongType), StructField("attr", StringType)))
       val key = s.transaction { tx =>
         val m = tx.bucket("bk").schema("m")
         val l = new java.util.ArrayList[Row]()
-        // one dim key per fact file; only the keys in files 1 and 6 survive
-        (0 until 8).foreach(i => l.add(
-          Row(i * 1000L + 5L, if (i == 1 || i == 6) "pick" else "skip")))
+        // one dim key per fact file (file 8 only exists after renameinsert);
+        // only the keys in the picked files survive
+        (0 to 8).foreach(i => l.add(
+          Row(i * 1000L + 5L, if (picks.contains(i)) "pick" else "skip")))
         m.createTable("dim", dimSchema).insert(spark.createDataFrame(l, dimSchema))
         evolve(m.table("t"))
       }
@@ -90,11 +103,12 @@ class ProjectionScanSpec extends SparkSpec {
         s"""SELECT f.$key, f.s FROM $cat.bk.m.t f
            |JOIN $cat.bk.m.dim d ON f.$key = d.a
            |WHERE d.attr = 'pick' ORDER BY f.$key""".stripMargin)
-      assert(df.collect().toSeq == Seq(Row(1005L, "r1-5"), Row(6005L, "r6-5")))
+      assert(df.collect().toSeq == picks.map(i => Row(i * 1000L + 5L, s"r$i-5")))
       val plan = df.queryExecution.executedPlan.toString
       val pruned = "runtime-pruned (\\d+)->(\\d+) files".r.findFirstMatchIn(plan)
-      assert(pruned.map(m => (m.group(1), m.group(2))).contains(("8", "2")),
-        s"$name: fact files not runtime-pruned 8->2:\n$plan")
+      val want = (files.toString, picks.size.toString)
+      assert(pruned.map(m => (m.group(1), m.group(2))).contains(want),
+        s"$name: fact files not runtime-pruned ${want._1}->${want._2}:\n$plan")
     }
   }
 }

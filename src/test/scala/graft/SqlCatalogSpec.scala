@@ -161,6 +161,12 @@ class SqlCatalogSpec extends SparkSpec {
         b.scan.readSchema().fieldNames.toSeq
     }
     assert(readSchemas == Seq(Seq("label")), s"no pruning in:\n$plan")
+    // …and each group's parquet scan reads only the column's physical name
+    // there: "s" in the files from before the rename, "label" after it
+    val groupSchemas = "ReadSchema: (struct<[^>]*>)".r
+      .findAllMatchIn(plan.toString).map(_.group(1)).toSeq.sorted
+    assert(groupSchemas == Seq("struct<label:string>", "struct<s:string>"),
+      s"group scans not pruned in:\n$plan")
     // namespace enumeration: buckets, then schemas inside
     assert(spark.sql("SHOW NAMESPACES IN graft2").collect()
       .map(_.getString(0)).contains("bk"))
