@@ -344,7 +344,9 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
     * written files again. */
   private def writeData(df: DataFrame, sorted: Boolean,
                         bucketOf: Option[Column] = None): Seq[FileEntry] = {
-    val batch = dataDir.resolve("b-" + UUID.randomUUID().toString.take(8))
+    // a full UUID: the write owns its directory, and an aborting write
+    // deletes it (see StatsWrite)
+    val batch = dataDir.resolve("b-" + UUID.randomUUID().toString)
     val zoneCols = zoneColumns(df.schema)
     StatsWrite.parquet(df, batch.toString, statAggs(df.schema, zoneCols, bucketOf))
       .map { case (name, r) =>
@@ -426,8 +428,8 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
     * (reference allocates 0..n-1 on first insert, vastdb/tests/util.py:175-180).
     * Per-partition offsets via zipWithIndex — no global sort, no driver
     * collect of data. A multi-partition batch pays one counting job for the
-    * offsets; a one-partition batch (every small driver-held batch, see
-    * [[oneFileIfSmallLocal]]) pays none. */
+    * offsets. A small driver-held batch never comes here: its ids are
+    * appended on the driver (see [[smallLocal]]). */
   private def assignRowIds(df: DataFrame, start: Long): DataFrame = {
     val schemaOut = StructType(df.schema.fields :+
       StructField(RowIdColumn, LongType, nullable = false))
@@ -451,21 +453,22 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
     * silently re-resolve to unrelated rows. */
   def overwrite(rows: DataFrame): (Long, Long) = writeBatch(rows, replace = true)
 
-  /** A batch whose rows are already on the driver (its optimized plan is a
-    * `LocalRelation`: `createDataFrame` of a local collection, or SQL
+  /** The rows of a batch that is already on the driver (its optimized plan
+    * is a `LocalRelation`: `createDataFrame` of a local collection, or SQL
     * `INSERT … VALUES`) and no larger than `spark.sql.files.openCostInBytes`
     * — Spark's own estimate of what opening one file costs, in bytes
-    * scanned — is written as ONE partition: one write task, one file, and
-    * no `zipWithIndex` counting job. `LocalTableScan` would otherwise slice
-    * it to `defaultParallelism` files that every later read opens. Computed
+    * scanned. Such a batch is written as ONE partition: one write task, one
+    * file. `LocalTableScan` would otherwise slice it to `defaultParallelism`
+    * files that every later read opens. Its row ids are appended to the
+    * local rows on the driver: no RDD stage, no `zipWithIndex`. Computed
     * plans are left alone: their size estimate can be far below their real
     * size, and `coalesce(1)` would pull their whole upstream onto one core. */
-  private def oneFileIfSmallLocal(df: DataFrame): DataFrame = {
-    val plan = df.queryExecution.optimizedPlan
-    val small = plan.isInstanceOf[LocalRelation] &&
-      plan.stats.sizeInBytes <= spark.sessionState.conf.filesOpenCostInBytes
-    if (small) df.coalesce(1) else df
-  }
+  private def smallLocal(df: DataFrame): Option[LocalRelation] =
+    df.queryExecution.optimizedPlan match {
+      case r: LocalRelation
+          if r.stats.sizeInBytes <= spark.sessionState.conf.filesOpenCostInBytes => Some(r)
+      case _ => None
+    }
 
   private def writeBatch(rows: DataFrame, replace: Boolean): (Long, Long) = {
     val m = manifest
@@ -474,12 +477,14 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
     def stage(entries: Seq[FileEntry], nextId: Long): Unit =
       stageContent(m, (if (replace) Seq.empty else m.files) ++ entries, nextId)
     val explicitIds = rows.columns.contains(RowIdColumn)
-    val aligned = oneFileIfSmallLocal(rows.select(
-      ((if (explicitIds) Seq(RowIdColumn) else Nil) ++ logical.fieldNames).map(col): _*))
+    val aligned = rows.select(
+      ((if (explicitIds) Seq(RowIdColumn) else Nil) ++ logical.fieldNames).map(col): _*)
+    val local = smallLocal(aligned)
     if (explicitIds) {
       // a NULL id would be stored unaddressable, its file's range recorded
       // as [0, 0]: fail inside the write task instead (no extra job)
-      val checked = aligned.withColumn(RowIdColumn,
+      val one = if (local.isDefined) aligned.coalesce(1) else aligned
+      val checked = one.withColumn(RowIdColumn,
         when(col(RowIdColumn).isNull, raise_error(lit(
           s"$op: explicit $RowIdColumn is NULL; every row needs a non-NULL id")))
           .otherwise(col(RowIdColumn)))
@@ -498,7 +503,10 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
       return (entries.map(_.minRowId).min, hi)
     }
     val start = m.nextRowId
-    val withIds = assignRowIds(aligned, start)
+    val withIds = local match {
+      case Some(r) => Glue.withRowIds(spark, r, RowIdColumn, start).coalesce(1)
+      case None => assignRowIds(aligned, start)
+    }
     val sortedWrite = m.sortingKeys.nonEmpty &&
       m.sortingKeys.forall(logical.fieldNames.contains)
     val data = if (sortedWrite)
@@ -1351,10 +1359,10 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
     // empty COW-staging dirs left behind after their files went — emptiness
     // checked AT DELETE TIME (deepest first), so a chain of nested empty
     // dirs collapses in one pass instead of one level per vacuum. The age
-    // guard applies to DIRS too: a concurrent distributed write's
-    // just-created staging dirs (data/b-<uuid>/, Spark _temporary/attempt
-    // dirs) are momentarily empty, and deleting one mid-write fails the
-    // insert — young dirs are left for the next vacuum.
+    // guard applies to DIRS too: a concurrent write's just-created batch dir
+    // (data/b-<uuid>/, and the SQL row-level COW's Spark staging dirs) is
+    // momentarily empty, and deleting one mid-write fails the write —
+    // young dirs are left for the next vacuum.
     if (Files.isDirectory(dataDir))
       Table.walkPaths(dataDir).reverse
         .filter(p => Files.isDirectory(p) && p != dataDir)

@@ -2,8 +2,10 @@ package org.apache.spark.sql.graftglue
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.LongType
 
 /**
  * Bridge into `private[sql]` Spark internals (Column ↔ Catalyst Expression,
@@ -38,6 +40,21 @@ object Glue {
     val spark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     spark.internalCreateDataFrame(df.queryExecution.toRdd, df.schema,
       isStreaming = false)
+  }
+
+  /** The rows of `rel` with a non-null long column `name` appended, holding
+    * `start` + the row's position: row ids assigned on the driver for a
+    * batch that is already there, with no RDD stage, no second plan and no
+    * Row ↔ InternalRow round trip. */
+  def withRowIds(spark: SparkSession, rel: LocalRelation, name: String,
+                 start: Long): org.apache.spark.sql.DataFrame = {
+    val types = rel.output.map(_.dataType)
+    val rows = rel.data.zipWithIndex.map { case (r, i) =>
+      new GenericInternalRow((r.toSeq(types) :+ (start + i)).toArray)
+    }
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      LocalRelation(rel.output :+ AttributeReference(name, LongType, nullable = false)(), rows))
   }
 
   /** Fully convert a Column to a catalyst expression tree (the lazy

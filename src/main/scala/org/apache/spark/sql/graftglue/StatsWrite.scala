@@ -1,10 +1,15 @@
 package org.apache.spark.sql.graftglue
 
+import java.nio.file.{Files, Paths}
 import java.util.UUID
 
 import scala.collection.mutable
 
-import org.apache.spark.internal.io.FileCommitProtocol
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{JobContext, TaskAttemptContext, TaskAttemptID}
+
+import org.apache.spark.internal.io.{FileCommitProtocol, FileNameSpec}
+import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, JoinedRow, MutableProjection, NamedExpression, SafeProjection, SpecificInternalRow}
@@ -30,8 +35,11 @@ object StatsWrite {
     * aggregates `aggs` (e.g. `count(lit(1))`, `min(col("x"))`) evaluated over
     * that file's rows — what `df.write.parquet(path)` followed by a read-back
     * grouped by `input_file_name()` returns, without the read-back job.
-    * Files come back in name order. Spark's empty-write marker file (an
-    * empty partition 0) has no rows and is left out. */
+    * Files come back in name order. The directory must not exist: the
+    * write creates it ([[DirectWriteCommit]]), deletes it if the write
+    * fails, and leaves in it exactly the returned files and their `.crc`
+    * sidecars. Spark's empty-write marker file (an empty partition 0) has
+    * no rows, so it is deleted, and so is a directory that holds no rows. */
   def parquet(df: DataFrame, path: String, aggs: Seq[Column]): Seq[(String, Row)] = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
     val spark = ds.sparkSession
@@ -44,9 +52,7 @@ object StatsWrite {
     val tracker = new FileAggTracker(dataCols, exprs)
     val qe = ds.queryExecution
     val plan = qe.executedPlan
-    val committer = FileCommitProtocol.instantiate(
-      spark.sessionState.conf.fileCommitProtocolClass,
-      jobId = UUID.randomUUID().toString, outputPath = path)
+    val committer = new DirectWriteCommit(UUID.randomUUID().toString, path)
     SQLExecution.withNewExecutionId(qe, Some("parquet write with file stats")) {
       FileFormatWriter.write(
         sparkSession = spark,
@@ -60,8 +66,88 @@ object StatsWrite {
         statsTrackers = Seq(tracker),
         options = Map.empty)
     }
-    tracker.files.sortBy(_._1)
+    // Spark writes a file for partition 0 even when it is empty; no entry
+    // names a 0-row file, so it goes, and so does a directory left empty
+    val kept = tracker.files.sortBy(_._1)
+    val empty = committer.committed.toSet -- kept.map(_._1)
+    if (empty.nonEmpty) {
+      val dir = new Path(path)
+      val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+      if (kept.isEmpty) fs.delete(dir, true)
+      else empty.foreach(name => fs.delete(new Path(dir, name), false))
+    }
+    kept
   }
+}
+
+/**
+ * The commit protocol of [[StatsWrite]]: tasks write their files straight
+ * into the batch directory under their final names, and nothing is
+ * renamed, because the files are published by the manifest commit that
+ * names them, not by their location. The technique of Delta Lake's
+ * `DelayedCommitProtocol`. It suits only a write whose directory is fresh
+ * and whose files are read through manifest entries alone:
+ *  - `setupJob` creates the directory exclusively, so a job never writes
+ *    into (or, aborting, deletes) a directory another write owns;
+ *  - a file is `part-<split>-<jobId>-<attempt><ext>`: a retried or
+ *    speculative attempt never reuses another attempt's name;
+ *  - `commitTask` returns the attempt's file names and `abortTask` deletes
+ *    its files; a killed attempt's file stays unreferenced and is reaped
+ *    by `vacuumVersions` behind its age gate;
+ *  - `commitJob` writes nothing (no `_SUCCESS`) and `abortJob` deletes the
+ *    directory `setupJob` created.
+ * Spark's own writes (`df.write`, the SQL row-level COW) keep the session's
+ * `spark.sql.sources.commitProtocolClass`.
+ */
+class DirectWriteCommit(jobId: String, path: String)
+    extends FileCommitProtocol with Serializable {
+
+  /** Every file name the committed tasks returned; set by `commitJob`. */
+  @transient var committed: Seq[String] = Nil
+  @transient private var created = false
+  // per attempt: the files it opened (one attempt per deserialized copy
+  // in a task, several when driven directly)
+  @transient private lazy val opened = mutable.Map.empty[TaskAttemptID, mutable.ArrayBuffer[Path]]
+
+  override def setupJob(jobContext: JobContext): Unit = {
+    val dir = Paths.get(new Path(path).toUri.getPath)
+    Option(dir.getParent).foreach(Files.createDirectories(_))
+    Files.createDirectory(dir) // throws if another write owns it
+    created = true
+  }
+
+  override def commitJob(jobContext: JobContext, taskCommits: Seq[TaskCommitMessage]): Unit =
+    committed = taskCommits.flatMap(_.obj.asInstanceOf[Seq[String]])
+
+  override def abortJob(jobContext: JobContext): Unit =
+    if (created) {
+      val dir = new Path(path)
+      dir.getFileSystem(jobContext.getConfiguration).delete(dir, true)
+    }
+
+  override def setupTask(taskContext: TaskAttemptContext): Unit = ()
+
+  override def newTaskTempFile(taskContext: TaskAttemptContext, dir: Option[String],
+                               spec: FileNameSpec): String = {
+    val attempt = taskContext.getTaskAttemptID
+    val name = f"${spec.prefix}part-${attempt.getTaskID.getId}%05d-$jobId-" +
+      s"${attempt.getId}${spec.suffix}"
+    val file = new Path(dir.fold(new Path(path))(new Path(path, _)), name)
+    opened.synchronized(opened.getOrElseUpdate(attempt, mutable.ArrayBuffer.empty) += file)
+    file.toString
+  }
+
+  override def commitTask(taskContext: TaskAttemptContext): TaskCommitMessage =
+    new TaskCommitMessage(filesOf(taskContext).map(_.getName).toSeq)
+
+  override def abortTask(taskContext: TaskAttemptContext): Unit =
+    filesOf(taskContext).foreach { f =>
+      // the Hadoop file system deletes the `.crc` sidecar with the file
+      f.getFileSystem(taskContext.getConfiguration).delete(f, false)
+    }
+
+  private def filesOf(taskContext: TaskAttemptContext): Seq[Path] =
+    opened.synchronized(opened.remove(taskContext.getTaskAttemptID)).map(_.toSeq).getOrElse(Nil)
 }
 
 /** Job half: collects the per-file results of the committed tasks. */
@@ -80,8 +166,8 @@ private case class FileAggs(files: Seq[(String, Row)]) extends WriteTaskStats
 
 /** Task half: one aggregation buffer per file, updated with the same
   * initial/update/evaluate expressions a hash aggregate would use. Results
-  * are keyed by file NAME: the task writes under an attempt path that the
-  * job commit renames into the output directory. */
+  * are keyed by file name: the task writes each file into the batch
+  * directory under its final name ([[DirectWriteCommit]]). */
 private class FileAggTaskTracker(dataCols: Seq[Attribute], exprs: Seq[NamedExpression])
     extends WriteTaskStatsTracker {
   private val aggs = exprs.flatMap(_.collect {

@@ -1,14 +1,21 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{FileAlreadyExistsException, Files, Path}
 import java.sql.{Date, Timestamp}
 import java.time.LocalDateTime
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.task.{JobContextImpl, TaskAttemptContextImpl}
+
 import org.apache.spark.graftspec.BusDrain
+import org.apache.spark.internal.io.FileNameSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.{DirectWriteCommit, StatsWrite}
 import org.apache.spark.sql.types._
 
 import graft.api._
@@ -16,7 +23,8 @@ import graft.types.TypeMapping.RowIdColumn
 
 /** Manifest entries computed inside the write task must equal the ones the
   * read-back stats pass (`statsEntries`) computes over the same files, for
-  * every zone-map kind; and an insert must not read its own output. */
+  * every zone-map kind; an insert must not read its own output; and a
+  * write's batch directory holds only the files its entries name. */
 class StatsWriteSpec extends SparkSpec {
 
   private val schema = StructType(Seq(
@@ -161,6 +169,102 @@ class StatsWriteSpec extends SparkSpec {
     tx.rollback()
   }
 
+  /** Physical plans of the SQL executions `f` starts. */
+  private def plansOf(f: => Unit): Seq[String] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case st: SparkListenerSQLExecutionStart => plans.add(st.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try { f; BusDrain(sc) } finally sc.removeSparkListener(l)
+    plans.asScala.toSeq
+  }
+
+  test("a small driver-held batch gets its row ids on the driver") {
+    val (_, tx, t) = freshTable("localplan")
+    val plans = plansOf(assert(t.insert(local(50)) == ((0L, 50L))))
+    val write = plans.filter(_.contains(RowIdColumn))
+    assert(write.nonEmpty, plans.mkString("\n"))
+    // the write scans the local rows with their ids, not an RDD built from them
+    assert(write.forall(p => p.contains("LocalTableScan") && !p.contains("ExistingRDD")),
+      write.mkString("\n"))
+    tx.rollback()
+  }
+
+  /** Regular files under `d`, by name relative to it. */
+  private def filesUnder(d: Path): Set[String] =
+    if (!Files.isDirectory(d)) Set.empty
+    else Table.walkPaths(d).filter(Files.isRegularFile(_)).map(d.relativize(_).toString).toSet
+
+  test("each write's batch directory holds exactly its entries' files") {
+    val (_, tx, t) = freshTable("dirs")
+    val data0 = t.dir.resolve("data")
+    def step(name: String)(op: => Unit): Unit = {
+      val before = t.manifest.files.map(_.path).toSet
+      val dirsBefore = Table.listDir(data0).toSet
+      op
+      val added = t.manifest.files.map(_.path).filterNot(before)
+      assert(added.nonEmpty, name)
+      val dirs = Table.listDir(data0).toSet -- dirsBefore
+      assert(dirs == added.map(p => t.dir.resolve(p).getParent).toSet, name)
+      dirs.foreach { d =>
+        val names = added.map(t.dir.resolve(_)).filter(_.getParent == d)
+          .map(_.getFileName.toString).toSet
+        val sidecars = filesUnder(d) -- names
+        assert(names.subsetOf(filesUnder(d)), s"$name: $d")
+        assert(sidecars == names.map(n => s".$n.crc").filter(sidecars), s"$name: $sidecars")
+      }
+    }
+    step("insert")(t.insert(data(30)))
+    step("local insert")(t.insert(local(20)))
+    step("update")(t.updateWhere(col("i") === 0, Map("s" -> lit("u"))))
+    step("compact")(t.compact(targetRows = 1000L))
+    assert(!filesUnder(data0).exists(f => f.contains("_temporary") || f.contains("_SUCCESS")))
+    assertParity(t)
+    tx.rollback()
+  }
+
+  test("a write into an existing directory fails and leaves it intact") {
+    val dir = Files.createTempDirectory("graft-owned")
+    Files.write(dir.resolve("part-other.parquet"), Array[Byte](1, 2, 3))
+    intercept[FileAlreadyExistsException](
+      StatsWrite.parquet(local(5), dir.toString, Seq(count(lit(1)))))
+    assert(filesUnder(dir) == Set("part-other.parquet"))
+    assert(Files.readAllBytes(dir.resolve("part-other.parquet")).toSeq == Seq[Byte](1, 2, 3))
+  }
+
+  test("two attempts of one task write distinct files; abortTask removes its own") {
+    val dir = Files.createTempDirectory("graft-commit").resolve("b")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val commit = new DirectWriteCommit("j1", dir.toString)
+    val job = new JobContextImpl(conf, new JobID("graft", 0))
+    commit.setupJob(job)
+    val task = new TaskID(job.getJobID, TaskType.MAP, 3)
+    val (first, second) = (new TaskAttemptContextImpl(conf, new TaskAttemptID(task, 7)),
+      new TaskAttemptContextImpl(conf, new TaskAttemptID(task, 8)))
+    def write(a: TaskAttemptContextImpl): String = {
+      val f = new org.apache.hadoop.fs.Path(
+        commit.newTaskTempFile(a, None, FileNameSpec("", "-c000.parquet")))
+      f.getFileSystem(conf).create(f).close()
+      f.getName
+    }
+    val (n1, n2) = (write(first), write(second))
+    assert(n1 == "part-00003-j1-7-c000.parquet" && n2 == "part-00003-j1-8-c000.parquet")
+    commit.abortTask(first)
+    assert(filesUnder(dir) == Set(n2, s".$n2.crc"))
+    val msg = commit.commitTask(second)
+    assert(msg.obj == Seq(n2))
+    commit.commitJob(job, Seq(msg))
+    assert(commit.committed == Seq(n2) && filesUnder(dir) == Set(n2, s".$n2.crc"),
+      "a job commit renames nothing and writes no marker")
+    commit.abortJob(job)
+    assert(!Files.exists(dir), "an aborted job deletes the directory it created")
+  }
+
   test("a small driver-held batch with explicit ids is one file") {
     val (_, tx, t) = freshTable("localids")
     assert(t.insert(local(1000).withColumn(RowIdColumn, col("l") + 10000L)) == ((9950L, 16944L)))
@@ -211,9 +315,14 @@ class StatsWriteSpec extends SparkSpec {
       .exists(x => x.getMessage != null && x.getMessage.contains("NULL")), e.toString)
     tx2.rollback()
     s.transaction { tx3 =>
-      val after = table(tx3).manifest
+      val t3 = table(tx3)
+      val after = t3.manifest
       assert(after.version == m.version && after.files == m.files &&
         after.nextRowId == m.nextRowId)
+      // the failed write left no parquet file behind
+      val data0 = t3.dir.resolve("data")
+      assert(filesUnder(data0).filter(_.endsWith(".parquet")).map(data0.resolve(_)) ==
+        m.files.map(f => t3.dir.resolve(f.path)).toSet)
     }
   }
 }

@@ -16,8 +16,8 @@ class VacuumSpec extends SparkSpec {
   private val schema = StructType(Seq(
     StructField("a", LongType), StructField("s", StringType)))
 
-  /** Real data files only — vacuum also sweeps writer sidecars (_SUCCESS,
-    * .crc), which no manifest ever references. */
+  /** Real data files only — vacuum also sweeps writer sidecars (`.crc`, and
+    * `_SUCCESS` from Spark's own writes), which no manifest ever references. */
   private def dataFiles(tdir: java.nio.file.Path): Set[String] =
     Table.walkPaths(tdir.resolve("data"))
       .filter(Files.isRegularFile(_))
