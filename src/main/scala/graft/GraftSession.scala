@@ -48,6 +48,13 @@ object GraftSession {
       // 100 entries against a ~360-class curation pass meant each pass
       // recompiled nearly every class; see CodegenCacheEntries
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      // the codegen cache is keyed by classloader as well as code, and with
+      // artifact isolation on, executors give every session its own
+      // classloader. Each streaming query runs in a clone of the session,
+      // so every changefeed drain recompiled classes an earlier drain had
+      // compiled. graft adds no session artifacts (jars, files, REPL
+      // classes), so isolation only cost the recompiles.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       // spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold is LEFT AT
       // ITS DEFAULT (0 = no SMJ→SHJ rewrite) deliberately. Round 14
       // measured the 64m setting the optimization guide suggests trying:

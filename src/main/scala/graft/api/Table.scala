@@ -460,9 +460,12 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
     * scanned. Such a batch is written as ONE partition: one write task, one
     * file. `LocalTableScan` would otherwise slice it to `defaultParallelism`
     * files that every later read opens. Its row ids are appended to the
-    * local rows on the driver: no RDD stage, no `zipWithIndex`. Computed
-    * plans are left alone: their size estimate can be far below their real
-    * size, and `coalesce(1)` would pull their whole upstream onto one core. */
+    * local rows on the driver: no RDD stage, no `zipWithIndex`. Unless a
+    * sort or a bucket layout sits above it, the coalesced batch reaches
+    * [[StatsWrite]] as a `LocalRelation` under `coalesce(1)`, and its one
+    * write task runs on the driver: no Spark job. Computed plans are left
+    * alone: their size estimate can be far below their real size, and
+    * `coalesce(1)` would pull their whole upstream onto one core. */
   private def smallLocal(df: DataFrame): Option[LocalRelation] =
     df.queryExecution.optimizedPlan match {
       case r: LocalRelation
@@ -482,12 +485,18 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
     val local = smallLocal(aligned)
     if (explicitIds) {
       // a NULL id would be stored unaddressable, its file's range recorded
-      // as [0, 0]: fail inside the write task instead (no extra job)
-      val one = if (local.isDefined) aligned.coalesce(1) else aligned
-      val checked = one.withColumn(RowIdColumn,
-        when(col(RowIdColumn).isNull, raise_error(lit(
-          s"$op: explicit $RowIdColumn is NULL; every row needs a non-NULL id")))
-          .otherwise(col(RowIdColumn)))
+      // as [0, 0]: fail before writing rows the driver holds (the batch
+      // stays a plain coalesced LocalRelation, which StatsWrite writes on
+      // the driver), and inside the write task otherwise (no extra job)
+      val nullId = s"$op: explicit $RowIdColumn is NULL; every row needs a non-NULL id"
+      val checked = local match {
+        case Some(r) =>
+          val id = r.output.indexWhere(_.name == RowIdColumn)
+          if (r.data.exists(_.isNullAt(id))) throw new IllegalArgumentException(nullId)
+          aligned.coalesce(1)
+        case None => aligned.withColumn(RowIdColumn,
+          when(col(RowIdColumn).isNull, raise_error(lit(nullId))).otherwise(col(RowIdColumn)))
+      }
       val (bAligned, bOf) = bucketized(checked, m)
       val entries = writeData(bAligned, sorted = false, bOf)
       if (entries.isEmpty) {

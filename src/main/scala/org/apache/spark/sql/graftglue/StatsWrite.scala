@@ -1,25 +1,27 @@
 package org.apache.spark.sql.graftglue
 
 import java.nio.file.{Files, Paths}
-import java.util.UUID
+import java.util.{Date, UUID}
 
 import scala.collection.mutable
 
 import org.apache.hadoop.fs.Path
-import org.apache.hadoop.mapreduce.{JobContext, TaskAttemptContext, TaskAttemptID}
+import org.apache.hadoop.mapreduce.{Job, JobContext, TaskAttemptContext, TaskAttemptID}
+import org.apache.hadoop.mapreduce.lib.output.FileOutputFormat
 
-import org.apache.spark.internal.io.{FileCommitProtocol, FileNameSpec}
+import org.apache.spark.internal.io.{FileCommitProtocol, FileNameSpec, SparkHadoopWriterUtils}
 import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, JoinedRow, MutableProjection, NamedExpression, SafeProjection, SpecificInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, DeclarativeAggregate}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, LogicalPlan, Repartition}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.execution.datasources.{FileFormatWriter, WriteJobStatsTracker, WriteTaskStats, WriteTaskStatsTracker}
+import org.apache.spark.sql.execution.datasources.{DataSourceUtils, FileFormatWriter, WriteJobDescription, WriteJobStatsTracker, WriteTaskStats, WriteTaskStatsTracker}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.util.SerializableConfiguration
 
 /**
  * Parquet write that computes per-file statistics inside the write task:
@@ -27,6 +29,12 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
  * the given Catalyst aggregates over exactly the rows that went into that
  * file, so nothing has to read the files back to learn what is in them.
  * The technique of Delta Lake's `DeltaJobStatisticsTracker`.
+ *
+ * A write that is one task over rows already on the driver (its optimized
+ * plan is a `LocalRelation`, possibly under one `coalesce(1)`) runs that
+ * task on the calling thread: the same job description, commit protocol
+ * and stats tracker, no Spark job. Scheduling the one task costs more than
+ * writing a small batch does. Every other plan runs as a Spark job.
  */
 object StatsWrite {
 
@@ -39,7 +47,9 @@ object StatsWrite {
     * write creates it ([[DirectWriteCommit]]), deletes it if the write
     * fails, and leaves in it exactly the returned files and their `.crc`
     * sidecars. Spark's empty-write marker file (an empty partition 0) has
-    * no rows, so it is deleted, and so is a directory that holds no rows. */
+    * no rows, so it is deleted, and so is a directory that holds no rows.
+    * The write is one SQL execution; a driver-held batch runs no job in it
+    * (see [[driverRows]]). */
   def parquet(df: DataFrame, path: String, aggs: Seq[Column]): Seq[(String, Row)] = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
     val spark = ds.sparkSession
@@ -51,20 +61,24 @@ object StatsWrite {
       .asInstanceOf[Aggregate].aggregateExpressions
     val tracker = new FileAggTracker(dataCols, exprs)
     val qe = ds.queryExecution
-    val plan = qe.executedPlan
     val committer = new DirectWriteCommit(UUID.randomUUID().toString, path)
     SQLExecution.withNewExecutionId(qe, Some("parquet write with file stats")) {
-      FileFormatWriter.write(
-        sparkSession = spark,
-        plan = plan,
-        fileFormat = new ParquetFileFormat,
-        committer = committer,
-        outputSpec = FileFormatWriter.OutputSpec(path, Map.empty, plan.output),
-        hadoopConf = spark.sessionState.newHadoopConf(),
-        partitionColumns = Nil,
-        bucketSpec = None,
-        statsTrackers = Seq(tracker),
-        options = Map.empty)
+      driverRows(qe.optimizedPlan) match {
+        case Some(rel) => writeOnDriver(spark, rel, path, committer, tracker)
+        case None =>
+          val plan = qe.executedPlan
+          FileFormatWriter.write(
+            sparkSession = spark,
+            plan = plan,
+            fileFormat = new ParquetFileFormat,
+            committer = committer,
+            outputSpec = FileFormatWriter.OutputSpec(path, Map.empty, plan.output),
+            hadoopConf = spark.sessionState.newHadoopConf(),
+            partitionColumns = Nil,
+            bucketSpec = None,
+            statsTrackers = Seq(tracker),
+            options = Map.empty)
+      }
     }
     // Spark writes a file for partition 0 even when it is empty; no entry
     // names a 0-row file, so it goes, and so does a directory left empty
@@ -77,6 +91,63 @@ object StatsWrite {
       else empty.foreach(name => fs.delete(new Path(dir, name), false))
     }
     kept
+  }
+
+  /** The rows of a write that Spark would run as one task over rows already
+    * on the driver: a `LocalRelation` under one `coalesce(1)`, or one of at
+    * most one row (`LocalTableScan` slices a larger one to
+    * `defaultParallelism` tasks, so it keeps them). A sort, a computed
+    * column or any other operator leaves the plan to the job path. */
+  private def driverRows(plan: LogicalPlan): Option[LocalRelation] = plan match {
+    case Repartition(1, false, r: LocalRelation) if !r.isStreaming => Some(r)
+    case r: LocalRelation if !r.isStreaming && r.data.size <= 1 => Some(r)
+    case _ => None
+  }
+
+  /** The one write task of `rel` on the calling thread, framed as
+    * `FileFormatWriter.write` frames a job's tasks: job setup, the task
+    * (`executeTask`, which aborts the task's files if a row fails), job
+    * commit and the trackers' stats. On any failure the job is aborted,
+    * which deletes the directory, and the failure is rethrown. */
+  private def writeOnDriver(spark: classic.SparkSession, rel: LocalRelation, path: String,
+                            committer: DirectWriteCommit, tracker: FileAggTracker): Unit = {
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    job.setOutputKeyClass(classOf[Void])
+    job.setOutputValueClass(classOf[InternalRow])
+    FileOutputFormat.setOutputPath(job, new Path(path))
+    val format = new ParquetFileFormat
+    val dataSchema = DataTypeUtils.fromAttributes(rel.output)
+    DataSourceUtils.verifySchema(format, dataSchema)
+    DataSourceUtils.checkFieldNames(format, dataSchema)
+    // sets the job's parquet conf, so it comes before the conf is captured
+    val writerFactory = format.prepareWrite(spark, job, Map.empty, dataSchema)
+    val conf = spark.sessionState.conf
+    val description = new WriteJobDescription(
+      uuid = UUID.randomUUID().toString,
+      serializableHadoopConf = new SerializableConfiguration(job.getConfiguration),
+      outputWriterFactory = writerFactory,
+      allColumns = rel.output,
+      dataColumns = rel.output,
+      partitionColumns = Nil,
+      bucketSpec = None,
+      path = path,
+      customPartitionLocations = Map.empty,
+      maxRecordsPerFile = conf.maxRecordsPerFile,
+      timeZoneId = conf.sessionLocalTimeZone,
+      statsTrackers = Seq(tracker))
+    committer.setupJob(job)
+    try {
+      val result = FileFormatWriter.executeTask(description,
+        SparkHadoopWriterUtils.createJobTrackerID(new Date()), 0, 0, 0, committer,
+        rel.data.iterator, None)
+      committer.commitJob(job, Seq(result.commitMsg))
+      // one task with one tracker: its stats are the task's one result
+      tracker.processStats(result.summary.stats, 0L)
+    } catch {
+      case t: Throwable =>
+        committer.abortJob(job)
+        throw t
+    }
   }
 }
 

@@ -19,6 +19,8 @@ class ExtensionsSpec extends AnyFunSuite {
       // same JVM-wide cache size as SparkSpec.session, whichever runs first
       .config("spark.sql.codegen.cache.maxEntries",
         GraftSession.CodegenCacheEntries.toString)
+      // as GraftSession.tune: streaming clones share the executor classloader
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
       .withExtensions(new GraftExtensions)
       .getOrCreate()

@@ -2,7 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.Row
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
@@ -142,6 +145,37 @@ class GraftStreamSourceSpec extends SparkSpec {
         "long_enough_b0", "long_enough_b2"),
         s"delta run produced ${got.toSeq}")
     }
+  }
+
+  test("repeated drains of one shape compile no new classes") {
+    val root = Files.createTempDirectory("graft-stream-cg").toString
+    val s = VastSession(spark, root)
+    s.createBucket("bk")
+    s.transaction(tx => tx.bucket("bk").createSchema("m").createTable("t", schema))
+    val tdir = Paths.get(root, "bk", "m", "t").toString
+    val ckpt = Files.createTempDirectory("graft-stream-cg-ck").toString
+    val emitted = ArrayBuffer.empty[Row]
+    // one compile-time histogram update per compiled class
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    /** An insert, then one drain into an aggregating consumer; returns the
+      * classes the drain compiled. Each drain is a new streaming query,
+      * and so a new clone of the session. */
+    def round(i: Int): Long = {
+      insert(s, 20, s"r$i")
+      val before = compiles
+      spark.readStream.format("graft").option("ignoreChanges", "true").load(tdir)
+        .writeStream
+        .foreachBatch { (df: DataFrame, _: Long) =>
+          emitted += df.agg(count(lit(1)), sum(col("a")), max(length(col("s")))).head()
+          ()
+        }
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start().awaitTermination(120000)
+      compiles - before
+    }
+    val perDrain = (1 to 3).map(round)
+    assert(emitted.map(_.getLong(0)) == Seq(20L, 20L, 20L))
+    assert(perDrain(1) == 0 && perDrain(2) == 0, s"classes compiled per drain: $perDrain")
   }
 
   test("startingVersion=latest tails new commits without replaying history") {

@@ -25,6 +25,9 @@ object SparkSpec {
         // suite's session starts first, so every test builder sets this
         .config("spark.sql.codegen.cache.maxEntries",
           GraftSession.CodegenCacheEntries.toString)
+        // as GraftSession.tune: a streaming query's cloned session shares
+        // the executor classloader, so its drains reuse compiled classes
+        .config("spark.sql.artifact.isolation.enabled", "false")
         // keep explicit partitionBy(lit(0)) specs — see GraftSession.tune
         .config("spark.sql.optimizer.excludedRules",
           "org.apache.spark.sql.catalyst.optimizer.EliminateWindowPartitions")

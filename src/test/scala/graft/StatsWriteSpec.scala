@@ -135,13 +135,16 @@ class StatsWriteSpec extends SparkSpec {
     }
   }
 
-  private def jobsOf(group: String)(f: => Unit): Int = {
+  /** `f`'s result and the number of Spark jobs it ran. */
+  private def withJobs[T](group: String)(f: => T): (T, Int) = {
     val sc = spark.sparkContext
     sc.setJobGroup(group, group)
-    try f finally sc.clearJobGroup()
+    val out = try f finally sc.clearJobGroup()
     BusDrain(sc)
-    sc.statusTracker.getJobIdsForGroup(group).length
+    (out, sc.statusTracker.getJobIdsForGroup(group).length)
   }
+
+  private def jobsOf(group: String)(f: => Unit): Int = withJobs(group)(f)._2
 
   test("an insert runs no job reading its own output") {
     val (_, tx, t) = freshTable("jobs")
@@ -159,7 +162,8 @@ class StatsWriteSpec extends SparkSpec {
     t.insert(data(20))
     val before = t.manifest.files.size
     val batch = local(1000)
-    assert(jobsOf("sw-local")(assert(t.insert(batch) == ((20L, 1020L)))) == 1)
+    // written on the driver (StatsWrite.parquet's driver path): no job
+    assert(jobsOf("sw-local")(assert(t.insert(batch) == ((20L, 1020L)))) == 0)
     assert(t.manifest.files.size == before + 1)
     // ids follow the batch's input order: row k was generated with l = 7k - 50
     val ids = t.select(Seq("l"), internalRowId = true).select("l", RowIdColumn).collect()
@@ -267,7 +271,8 @@ class StatsWriteSpec extends SparkSpec {
 
   test("a small driver-held batch with explicit ids is one file") {
     val (_, tx, t) = freshTable("localids")
-    assert(t.insert(local(1000).withColumn(RowIdColumn, col("l") + 10000L)) == ((9950L, 16944L)))
+    val batch = local(1000).withColumn(RowIdColumn, col("l") + 10000L)
+    assert(jobsOf("sw-local-ids")(assert(t.insert(batch) == ((9950L, 16944L)))) == 0)
     assert(t.manifest.files.size == 1 && t.manifest.nextRowId == 16944L)
     tx.rollback()
   }
@@ -283,7 +288,7 @@ class StatsWriteSpec extends SparkSpec {
       val jobs = try jobsOf(s"sw-bound-$bound")(t.insert(batch)) finally spark.conf.unset(key)
       (jobs, t.manifest.files.size - n0)
     }
-    assert(filesAt(size) == ((1, 1)), "a batch exactly at the bound is one file")
+    assert(filesAt(size) == ((0, 1)), "a batch exactly at the bound is one file, no job")
     val (jobs, files) = filesAt(size - 1)
     assert(jobs == 2 && files > 1)
     tx.rollback()
@@ -296,8 +301,11 @@ class StatsWriteSpec extends SparkSpec {
     s.transaction { tx2 =>
       val t2 = tx2.bucket("b").schema("m").table("local0")
       val m = t2.manifest
-      assert(t2.insert(local(0)) == ((20L, 20L)))
+      val dirs = Table.listDir(t2.dir.resolve("data")).toSet
+      // written on the driver: no job, and the empty batch directory is gone
+      assert(jobsOf("sw-local0")(assert(t2.insert(local(0)) == ((20L, 20L)))) == 0)
       assert(t2.manifest.files == m.files && t2.manifest.version == m.version)
+      assert(Table.listDir(t2.dir.resolve("data")).toSet == dirs)
     }
   }
 
@@ -307,13 +315,16 @@ class StatsWriteSpec extends SparkSpec {
     tx.commit()
     def table(x: Transaction) = x.bucket("b").schema("m").table("nullid")
     val m = s.transaction(x => table(x).manifest)
-    val ids = local(2).withColumn(RowIdColumn,
+    def nullFirst(df: DataFrame) = df.withColumn(RowIdColumn,
       when(col("l") === -50L, lit(null).cast(LongType)).otherwise(lit(7000L)))
-    val tx2 = s.beginTransaction()
-    val e = intercept[Exception](table(tx2).insert(ids))
-    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-      .exists(x => x.getMessage != null && x.getMessage.contains("NULL")), e.toString)
-    tx2.rollback()
+    // checked on the driver (a driver-held batch) and in the write task
+    Seq(nullFirst(local(2)), nullFirst(data(6))).foreach { ids =>
+      val tx2 = s.beginTransaction()
+      val e = intercept[Exception](table(tx2).insert(ids))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(x => x.getMessage != null && x.getMessage.contains("NULL")), e.toString)
+      tx2.rollback()
+    }
     s.transaction { tx3 =>
       val t3 = table(tx3)
       val after = t3.manifest
@@ -324,5 +335,65 @@ class StatsWriteSpec extends SparkSpec {
       assert(filesUnder(data0).filter(_.endsWith(".parquet")).map(data0.resolve(_)) ==
         m.files.map(f => t3.dir.resolve(f.path)).toSet)
     }
+  }
+
+  /** Aggregates over every column kind: counts, NULL counts, min and max. */
+  private def statsOf(df: DataFrame): Seq[Column] =
+    count(lit(1)) +: df.columns.toSeq.flatMap(c =>
+      Seq(count(col(c)), min(col(c)), max(col(c))))
+
+  test("the driver path's entries equal the job path's for the same batch") {
+    val root = Files.createTempDirectory("graft-sw-paths")
+    val onDriver = local(60).coalesce(1)
+    // the same rows in the same order, from an RDD: a one-task job
+    val asJob = spark.createDataFrame(spark.sparkContext.parallelize(rowsOf(60), 1), schema)
+    val (driver, driverJobs) = withJobs("sw-path-driver")(
+      StatsWrite.parquet(onDriver, root.resolve("d").toString, statsOf(onDriver)))
+    val (job, jobJobs) = withJobs("sw-path-job")(
+      StatsWrite.parquet(asJob, root.resolve("j").toString, statsOf(asJob)))
+    assert(driverJobs == 0 && jobJobs == 1)
+    assert(driver.size == 1 && job.size == 1)
+    val (d, j) = (driver.head._2, job.head._2)
+    assert(d == j, s"driver $d\njob    $j")
+    // the spec covers string extremes and NULLs on both paths
+    val s = schema.fieldIndex("s")
+    assert(d.getLong(1 + 3 * s) < 60 && d.getString(3 + 3 * s) == long)
+    assert(d.getLong(1 + 3 * schema.fieldIndex("none")) == 0)
+    Seq("d", "j").zip(Seq(driver, job)).foreach { case (dir, files) =>
+      val name = files.head._1
+      assert(filesUnder(root.resolve(dir)) == Set(name, s".$name.crc"), dir)
+    }
+  }
+
+  test("a row that throws mid-write leaves no batch directory") {
+    val dir = Files.createTempDirectory("graft-sw-throw").resolve("b")
+    val batch = local(20).coalesce(1)
+    // row 10 (l = 20) fails the in-task stats after the file got its first rows
+    val failing = Seq(count(lit(1)),
+      max(when(col("l") === 20L, raise_error(lit("boom at row 10"))).otherwise(col("l"))))
+    val (e, jobs) = withJobs("sw-throw")(
+      intercept[Exception](StatsWrite.parquet(batch, dir.toString, failing)))
+    assert(jobs == 0)
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(x => x.getMessage != null && x.getMessage.contains("boom at row 10")), e.toString)
+    assert(!Files.exists(dir), s"left behind: ${filesUnder(dir)}")
+  }
+
+  test("sorted and bucketed driver-held batches keep the job path") {
+    val (s, tx0, _) = freshTable("sortedlocal")
+    tx0.rollback()
+    def m(tx: Transaction) = tx.bucket("b").schema("m")
+    s.transaction(m(_).createTable("bucketedlocal", schema))
+    s.transaction(m(_).table("sortedlocal").addSortingKey(Seq("i")))
+    s.transaction(m(_).table("bucketedlocal").addBucketLayout(4, Seq("i")))
+    val tx = s.beginTransaction()
+    val sorted = m(tx).table("sortedlocal")
+    assert(jobsOf("sw-sorted-local")(sorted.insert(local(50))) >= 1)
+    assert(sorted.manifest.files.size == 1)
+    assertParity(sorted)
+    val bucketed = m(tx).table("bucketedlocal")
+    assert(jobsOf("sw-bucketed-local")(bucketed.insert(local(50))) >= 1)
+    assert(bucketed.manifest.files.size > 1 && bucketed.manifest.files.forall(_.bucket >= 0))
+    tx.rollback()
   }
 }
