@@ -6,7 +6,6 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftglue.{Glue, StatsWrite}
@@ -87,8 +86,6 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
     new TableMetadata(b.name, schemaNS.path, name, manifest)
   }
 
-  private def dataRoot: Path = Table.dataRootFor(dir)
-
   private[api] def resolveDataPath(p: String): String = Table.resolvePath(dir, p)
 
   // ------------------------------------------------------------------ scan
@@ -128,15 +125,6 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
     }
   }
 
-  private def predicateRoots(predicate: Column): Set[String] =
-    Glue.referencedRoots(predicate)
-
-  /** Zone-map file pruning (delegates to [[Table.pruneByZoneMaps]], which
-    * the SQL row-level COW path also uses for static group pruning). */
-  private[graft] def pruneByZoneMaps(entries: Seq[FileEntry],
-                                     predicate: Column): Seq[FileEntry] =
-    Table.pruneByZoneMaps(entries, predicate)
-
   /** Filtered+projected scan (reference `select`, vastdb/table.py:571-704).
     * Catalyst/Parquet take over everything the reference hand-rolls: splits
     * = file partitions, predicate/projection pushdown, limit short-circuit. */
@@ -147,7 +135,7 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
     val m = manifest
     val logical = m.schema
     val cols = if (columns.isEmpty) logical.fieldNames.toSeq else columns
-    val roots = predicateRoots(predicate)
+    val roots = Glue.referencedRoots(predicate)
     val needed = cols.toSet ++ roots
 
     // queuePriority → Spark's fair-scheduler pool, which is inherently a
@@ -191,11 +179,7 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
         val pdir = resolveDataPath(p.dir)
         val projSchema = StructType(logical.fields.filter(f => p.columns.contains(f.name)))
         scanSession.read.schema(projSchema.add(RowIdColumn, LongType)).parquet(pdir)
-      case None =>
-        val eqs = Glue.rangeConstraints(predicate)
-          .collect { case (c, "=", v) if v != null => (c, Seq(v)) }
-        readEntries(Table.pruneByBucket(pruneByZoneMaps(m.files, predicate),
-          logical, m.bucketKeys, m.bucketCount, eqs), logical, scanSession)
+      case None => readEntries(Table.planFiles(m, predicate), logical, scanSession)
     }
     val projected = base.filter(predicate)
       .select((if (internalRowId) RowIdColumn +: cols else cols).map(col): _*)
@@ -224,13 +208,13 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
 
   /** Row-count estimate without touching all the data (reference probe
     * split, vastdb/table.py:442-458): trivial predicates answer from the
-    * manifest (zero Spark jobs); filtered estimates prune candidate files by
-    * zone maps, then probe a BOUNDED file subset for selectivity and
+    * manifest (zero Spark jobs); filtered estimates plan candidate files
+    * ([[Table.planFiles]]), then probe a BOUNDED file subset for selectivity and
     * extrapolate — cost is O(probe files), not O(table). */
   def estimateRowCount(predicate: Column = lit(true)): Long = {
     val m = manifest
     if (Glue.isLiteralTrue(predicate)) return m.totalRows
-    val pruned = pruneByZoneMaps(m.files, predicate)
+    val pruned = Table.planFiles(m, predicate)
     if (pruned.isEmpty) return 0L
     // probe a SPREAD of files (first/middle/last), not the head of the list:
     // predicates correlated with insertion order (e.g. time filters with no
@@ -705,7 +689,8 @@ class Table private[api] (val schemaNS: SchemaNS, val name: String, val dir: Pat
                predicate: Column = lit(true)): DataFrame = {
     val m = manifestAt(version)
     val cols = if (columns.isEmpty) m.schema.fieldNames.toSeq else columns
-    readEntries(m.files, m.schema).filter(predicate).select(cols.map(col): _*)
+    readEntries(Table.planFiles(m, predicate), m.schema).filter(predicate)
+      .select(cols.map(col): _*)
   }
 
   private def manifestAt(version: Long): TableManifest = {
@@ -2606,6 +2591,22 @@ object Table {
       .orElse(covering.headOption)
   }
 
+  /** The one file planner: the files of `m` (or of its subset `files`) a
+    * read filtered by `cond` must open. Every reader calls it, and only it
+    * calls the three rules, in this order over the top-level conjuncts of
+    * `cond`: zone maps on the range constraints, per-value pruning for
+    * each `=`/`IN` value set, bucket pruning from the same value sets. A
+    * file holding a row that satisfies `cond` is always kept; the caller
+    * still evaluates `cond` over the kept files. */
+  def planFiles(m: TableManifest, cond: Column,
+                files: Option[Seq[FileEntry]] = None): Seq[FileEntry] = {
+    val sets = Glue.valueSets(cond)
+    val byValue = sets.foldLeft(pruneByZoneMaps(files.getOrElse(m.files), cond)) {
+      case (kept, (c, vs)) => pruneByInSet(kept, c, vs)
+    }
+    pruneByBucket(byValue, m.schema, m.bucketKeys, m.bucketCount, sets)
+  }
+
   /** Zone-map file pruning: drop files whose per-column min/max provably
     * can't satisfy a top-level range constraint (constraints extracted from
     * the unresolved Column tree by Glue.rangeConstraints). Stats are keyed
@@ -2636,7 +2637,13 @@ object Table {
     * Conservative: any comparison doubt answers true (keep the file). */
   private def statMayMatch(st: ColStat, op: String, v: Any): Boolean = {
     def cmpTo(bound: String): Int = st.kind match {
-      case "long" => v.asInstanceOf[Number].longValue.compareTo(bound.toLong)
+      case "long" => v match {
+        case n @ (_: java.lang.Long | _: java.lang.Integer | _: java.lang.Short |
+                  _: java.lang.Byte) => n.asInstanceOf[Number].longValue.compareTo(bound.toLong)
+        // others exactly: truncated, k < 10.5 would drop a file with k = 10
+        case n: Number => new java.math.BigDecimal(n.toString)
+          .compareTo(new java.math.BigDecimal(bound))
+      }
       case "double" => v.asInstanceOf[Number].doubleValue.compareTo(bound.toDouble)
       // UTF-8 binary order, matching the Spark min/max that produced
       // the stats — String.compareTo (UTF-16 code units) disagrees on
@@ -2667,9 +2674,8 @@ object Table {
     * before a single footer is read. Conjuncts must all hold, so the kept
     * bucket set is the intersection; nulls match nothing. Conservative:
     * requires a complete layout (a post-rewrite DML file carries no bucket
-    * id → no pruning), and a value that fails to convert to the key's
-    * Catalyst form keeps every file. Used by the API scan and the SQL scan
-    * builder alike. */
+    * id → no pruning), and a value that does not convert losslessly to the
+    * key's type keeps every file. Called only by [[planFiles]]. */
   def pruneByBucket(entries: Seq[FileEntry], schema: StructType,
                     bucketKeys: Seq[String], bucketCount: Int,
                     valueSets: Seq[(String, Seq[Any])]): Seq[FileEntry] = {
@@ -2680,16 +2686,15 @@ object Table {
       .map(_.dataType).getOrElse(return entries)
     val sets = valueSets.collect { case (`key`, vs) => vs.filter(_ != null) }
     if (sets.isEmpty) return entries
-    val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
-      .createToCatalystConverter(keyType)
     def bucketOf(v: Any): Int = {
-      val cat = v match {
-        // rangeConstraints may surface values already in Catalyst form
-        case u: org.apache.spark.unsafe.types.UTF8String => u
-        case other => conv(other)
-      }
+      // Murmur3 hashes by runtime class (Int 24 and Long 24 differ): cast
+      // a value to the key's type first, and only where that is lossless
+      import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+      val l = Literal(v)
+      if (l.dataType != keyType && !Cast.canUpCast(l.dataType, keyType))
+        throw new IllegalArgumentException(s"$v is no ${keyType.simpleString}")
       val h = org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction
-        .hash(cat, keyType, 42).toInt
+        .hash(Cast(l, keyType).eval(), keyType, 42).toInt
       ((h % bucketCount) + bucketCount) % bucketCount
     }
     val kept = try sets.map(_.map(bucketOf).toSet).reduce(_ intersect _)

@@ -3,8 +3,6 @@ package graft.sources
 import java.nio.file.{Files, Path, Paths}
 import java.util
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -15,7 +13,7 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.execution.datasources.v2.StreamingDataSourceV2ScanRelation
 import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.graftglue.{GroupRoutingFactory, RenameGroups}
+import org.apache.spark.sql.graftglue.{GraftFilters, GroupRoutingFactory, RenameGroups}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -234,8 +232,6 @@ private[graft] class GraftStreamScan(dir: Path, required: StructType,
     * parquet scans. Volatile: written by the optimizer rule on the driver,
     * read when the same batch plans its partitions. */
   @volatile private[graft] var streamFilters: Seq[Expression] = Nil
-  private[graft] def pushdownFilters: Seq[Expression] =
-    builderFilters ++ streamFilters
 
   /** Columns the per-batch plan actually consumes (None = all), offered by
     * the same rule. The scan's OUTPUT schema is pinned for the query's
@@ -339,17 +335,18 @@ private[graft] class GraftStreamScan(dir: Path, required: StructType,
     }
   }
 
-  /** Plan `files` as parquet partitions grouped by rename map: each group
+  /** Plan the `files` the file planner (`Table.planFiles`) keeps under the
+    * snapshotted filters, named by their current names (the filters stay
+    * post-scan filters, so only files holding no row the batch would emit
+    * are skipped), as parquet partitions grouped by rename map: each group
     * requests its PHYSICAL names in pinned-logical field order, so rows line
-    * up positionally with `required` and no per-row projection is needed.
-    * Per group, the pinned column's current name resolves to the group's
-    * physical name exactly like the SQL scans: a claim ON the current name
-    * by another logical (drop tombstone, renamed-away column) null-fills via
-    * a nonexistent `__absent_` request — dropped bytes never resurrect. Pushdown filters are re-addressed to each group's physical
-    * names so parquet row-group skipping survives renames. Each partition
-    * carries its group's reader factory (`RenameGroups.partitions`) —
-    * partitions from different micro-batches (and different rename eras)
-    * share one routing factory. */
+    * up positionally with `required`. Per group, the pinned column's current
+    * name resolves to its physical name like the SQL scans do
+    * (`FileEntry.physicalName`: a claimed name null-fills, so dropped bytes
+    * never resurrect), and pushdown filters are re-addressed to physical
+    * names. Each partition carries its group's reader factory
+    * (`RenameGroups.partitions`), so partitions from different micro-batches
+    * and rename eras share one routing factory. */
   private def planGroups(files: Seq[Manifest.FileEntry],
                          endM: Manifest.TableManifest,
                          span: String): Array[InputPartition] = {
@@ -370,7 +367,9 @@ private[graft] class GraftStreamScan(dir: Path, required: StructType,
         case Some((s, n, f)) if s == span => (n, builderFilters ++ f)
         case _ => (None, builderFilters) // rule skipped: prune nothing
       }
-    files.groupBy(_.renames).toSeq.flatMap { case (renames, group) =>
+    val planned = GraftFilters.fromCatalyst(pushed, n => curNames.getOrElse(n, n))
+      .fold(files)(c => graft.api.Table.planFiles(endM, c, Some(files)))
+    planned.groupBy(_.renames).toSeq.flatMap { case (renames, group) =>
       val phys = StructType(required.fields.map { f =>
         if (needed.exists(n => !n.contains(f.name) && f.name != "_row_id"))
           f.copy(name = s"__pruned_${f.name}") // null-filled, never decoded

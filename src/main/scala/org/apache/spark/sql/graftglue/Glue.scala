@@ -1,8 +1,10 @@
 package org.apache.spark.sql.graftglue
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, UnresolvedAttribute,
+  UnresolvedFunction}
+import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.LongType
@@ -88,43 +90,89 @@ object Glue {
         a.nameParts.head
     }.toSet
 
-  /** Top-level-AND range constraints (column, op, literal-value) from an
-    * unresolved predicate Column. Comparisons appear as unresolved function
-    * calls pre-analysis; foldable non-attribute sides (literals, casted
-    * literals) are evaluated here. */
-  def rangeConstraints(c: Column): Seq[(String, String, Any)] = {
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
-    import org.apache.spark.sql.catalyst.expressions._
-    val ops = Set(">", ">=", "<", "<=", "=", "==")
-    def attrOf(e: Expression): Option[String] = e match {
-      case a: UnresolvedAttribute if a.nameParts.size == 1 => Some(a.nameParts.head)
+  /** `c` with its comparison, IN, AND and OR calls (unresolved functions
+    * before analysis) as expression nodes: one match covers both spellings. */
+  private def predicateTree(c: Column): Expression =
+    catalystExpression(c).transformUp {
+      case f: UnresolvedFunction if f.nameParts.nonEmpty =>
+        (f.nameParts.last, f.arguments) match {
+          case (">", Seq(l, r)) => GreaterThan(l, r)
+          case (">=", Seq(l, r)) => GreaterThanOrEqual(l, r)
+          case ("<", Seq(l, r)) => LessThan(l, r)
+          case ("<=", Seq(l, r)) => LessThanOrEqual(l, r)
+          case ("=" | "==", Seq(l, r)) => EqualTo(l, r)
+          case ("and", Seq(l, r)) => And(l, r)
+          case ("or", Seq(l, r)) => Or(l, r)
+          case ("in", v +: list) if list.nonEmpty => In(v, list)
+          case _ => f
+        }
+    }
+
+  private def conjuncts(e: Expression): Seq[Expression] = e match {
+    case And(l, r) => conjuncts(l) ++ conjuncts(r)
+    case other => Seq(other)
+  }
+
+  private def attrOf(e: Expression): Option[String] = e match {
+    case a: UnresolvedAttribute if a.nameParts.size == 1 => Some(a.nameParts.head)
+    case _ => None
+  }
+
+  /** A literal operand, NULL included: literals as they are, foldable
+    * subtrees (e.g. cast('2024-01-01' as timestamp)) evaluated. */
+  private def literalOf(e: Expression): Option[Literal] = e match {
+    case l: Literal => Some(l)
+    case other =>
+      try {
+        if (other.resolved && other.foldable)
+          Some(Literal(other.eval(), other.dataType))
+        else other match {
+          case c0: Cast if c0.child.isInstanceOf[Literal] =>
+            val r = c0.withTimeZone("UTC") // session tz is pinned UTC
+            if (r.resolved) Some(Literal(r.eval(), r.dataType)) else None
+          case _ => None
+        }
+      } catch { case _: Exception => None }
+  }
+
+  /** `column IN (literal, …)`: the column and its literals. */
+  private def inList(v: Expression, list: Seq[Expression])
+      : Option[(String, Seq[Literal])] = for {
+    a <- attrOf(v)
+    ls <- list.foldLeft(Option(Seq.empty[Literal])) { (acc, e) =>
+      acc.flatMap(s => literalOf(e).map(s :+ _))
+    }
+  } yield (a, ls)
+
+  /** The value set each top-level `=` or `IN` conjunct restricts a column
+    * to, in external (Scala) form. An `=` NULL yields no set; an IN keeps
+    * its NULLs (both pruning rules that take value sets skip them). */
+  def valueSets(c: Column): Seq[(String, Seq[Any])] =
+    conjuncts(predicateTree(c)).flatMap {
+      case EqualTo(l, r) => inList(l, Seq(r)).orElse(inList(r, Seq(l)))
+        .filterNot(_._2.head.value == null)
+      case In(v, list) => inList(v, list)
       case _ => None
+    }.map { case (a, ls) =>
+      (a, ls.map(l => CatalystTypeConverters.convertToScala(l.value, l.dataType)))
     }
-    def litOf(e: Expression): Option[Any] = e match {
-      case l: Literal => Option(l.value)
-      case other =>
-        // resolve foldable subtrees (e.g. cast('2024-01-01' as timestamp))
-        try {
-          if (other.resolved && other.foldable) Option(other.eval())
-          else other match {
-            case c0: Cast if c0.child.isInstanceOf[Literal] =>
-              val r = c0.withTimeZone("UTC") // session tz is pinned UTC
-              if (r.resolved) Option(r.eval()) else None
-            case _ => None
-          }
-        } catch { case _: Exception => None }
-    }
+
+  /** Top-level-AND range constraints (column, op, literal-value) from an
+    * unresolved predicate Column; foldable non-attribute sides (literals,
+    * casted literals) are evaluated here. */
+  def rangeConstraints(c: Column): Seq[(String, String, Any)] = {
     def flip(op: String) = op match {
       case ">" => "<"; case ">=" => "<="; case "<" => ">"; case "<=" => ">="
       case o => o
     }
-    def norm(op: String) = if (op == "==") "=" else op
-    def cmp(op: String, l: Expression, r: Expression): Seq[(String, String, Any)] =
-      (attrOf(l), litOf(r), attrOf(r), litOf(l)) match {
-        case (Some(a), Some(v), _, _) => Seq((a, norm(op), v))
-        case (_, _, Some(a), Some(v)) => Seq((a, flip(norm(op)), v))
-        case _ => Nil
-      }
+    // `column op literal` (either side), NULL literals dropped
+    def comparison(e: Expression): Option[(String, String, Any)] = e match {
+      case b: BinaryComparison if b.symbol != "<=>" =>
+        inList(b.left, Seq(b.right)).map((_, b.symbol))
+          .orElse(inList(b.right, Seq(b.left)).map((_, flip(b.symbol))))
+          .collect { case ((a, Seq(v)), op) if v.value != null => (a, op, v.value) }
+      case _ => None
+    }
     // ---- OR-group envelopes (the reference grammar is AND of OR-groups over
     // single columns, docs/predicate.md): an OR (or IN-list) whose branches
     // all constrain ONE column collapses to a [lo, hi] envelope — sound for
@@ -151,48 +199,26 @@ object Glue {
           if ((c <= 0) == wantMin) a else v))
       }
     type Env = (String, Option[Any], Option[Any]) // col, lo, hi (None = open)
-    def boundsOfCmp(cs: Seq[(String, String, Any)]): Option[Env] = cs match {
-      case Seq((a, "=", v)) => Some((a, Some(v), Some(v)))
-      case Seq((a, ">", v)) => Some((a, Some(v), None))
-      case Seq((a, ">=", v)) => Some((a, Some(v), None))
-      case Seq((a, "<", v)) => Some((a, None, Some(v)))
-      case Seq((a, "<=", v)) => Some((a, None, Some(v)))
-      case _ => None
+    def boundsOfCmp(cmp: (String, String, Any)): Env = cmp match {
+      case (a, "=", v) => (a, Some(v), Some(v))
+      case (a, ">" | ">=", v) => (a, Some(v), None)
+      case (a, _, v) => (a, None, Some(v)) // "<" | "<="
     }
-    def inEnv(args: Seq[Expression]): Option[Env] =
+    def inEnv(v: Expression, list: Seq[Expression]): Option[Env] =
       for {
-        a <- attrOf(args.head)
-        vs <- args.tail.foldLeft(Option(Seq.empty[Any])) { (acc, e) =>
-          acc.flatMap(s => litOf(e).map(s :+ _))
-        }
-        if vs.nonEmpty
+        (a, ls) <- inList(v, list)
+        vs = ls.map(_.value)
+        if !vs.contains(null)
         lo <- extreme(vs, wantMin = true)
         hi <- extreme(vs, wantMin = false)
       } yield (a, Some(lo), Some(hi))
-    def env(e: Expression): Option[Env] = e match {
-      case f: UnresolvedFunction
-          if f.nameParts.lastOption.exists(ops) && f.arguments.size == 2 =>
-        boundsOfCmp(cmp(f.nameParts.last, f.arguments(0), f.arguments(1)))
-      case GreaterThan(l, r) => boundsOfCmp(cmp(">", l, r))
-      case GreaterThanOrEqual(l, r) => boundsOfCmp(cmp(">=", l, r))
-      case LessThan(l, r) => boundsOfCmp(cmp("<", l, r))
-      case LessThanOrEqual(l, r) => boundsOfCmp(cmp("<=", l, r))
-      case EqualTo(l, r) => boundsOfCmp(cmp("=", l, r))
-      case f: UnresolvedFunction
-          if f.nameParts.lastOption.contains("in") && f.arguments.size >= 2 =>
-        inEnv(f.arguments)
-      case In(v, list) => inEnv(v +: list)
-      case InSet(v, _) => None // values already optimized to a set; skip
-      case f: UnresolvedFunction
-          if f.nameParts.lastOption.contains("or") && f.arguments.size == 2 =>
-        orEnv(f.arguments(0), f.arguments(1))
-      case Or(l, r) => orEnv(l, r)
-      case f: UnresolvedFunction
-          if f.nameParts.lastOption.contains("and") && f.arguments.size == 2 =>
-        andEnv(f.arguments(0), f.arguments(1))
-      case And(l, r) => andEnv(l, r)
-      case _ => None
-    }
+    def env(e: Expression): Option[Env] = comparison(e).map(boundsOfCmp)
+      .orElse(e match {
+        case In(v, list) => inEnv(v, list)
+        case Or(l, r) => orEnv(l, r)
+        case And(l, r) => andEnv(l, r)
+        case _ => None // incl. InSet: values already optimized to a set
+      })
     // OR: the union's envelope — lo = min of los (open if either is open)
     def orEnv(l: Expression, r: Expression): Option[Env] =
       (env(l), env(r)) match {
@@ -214,25 +240,10 @@ object Glue {
           Some((a, lo, hi))
         case (le, re) => le.orElse(re)
       }
-    def envConstraints(e: Expression): Seq[(String, String, Any)] =
+    // each comparison as itself, OR-groups and IN-lists as their envelopes
+    conjuncts(predicateTree(c)).flatMap(e => comparison(e).map(Seq(_)).getOrElse(
       env(e).toSeq.flatMap { case (a, lo, hi) =>
         lo.map(v => (a, ">=", v)).toSeq ++ hi.map(v => (a, "<=", v)).toSeq
-      }
-    def walk(e: Expression): Seq[(String, String, Any)] = e match {
-      case And(l, r) => walk(l) ++ walk(r)
-      case f: UnresolvedFunction
-          if f.nameParts.lastOption.contains("and") && f.arguments.size == 2 =>
-        walk(f.arguments(0)) ++ walk(f.arguments(1))
-      case f: UnresolvedFunction
-          if f.nameParts.lastOption.exists(ops) && f.arguments.size == 2 =>
-        cmp(f.nameParts.last, f.arguments(0), f.arguments(1))
-      case GreaterThan(l, r) => cmp(">", l, r)
-      case GreaterThanOrEqual(l, r) => cmp(">=", l, r)
-      case LessThan(l, r) => cmp("<", l, r)
-      case LessThanOrEqual(l, r) => cmp("<=", l, r)
-      case EqualTo(l, r) => cmp("=", l, r)
-      case other => envConstraints(other) // OR-groups and IN-lists
-    }
-    walk(catalystExpression(c))
+      }))
   }
 }

@@ -1684,11 +1684,8 @@ private[graftglue] trait GraftV1Writable extends Table with SupportsWrite
   private def inTx[T](body: graft.api.Table => T): T =
     GraftFilters.inTx(writeRoot, writeIdent)(body)
 
-  private def filterToColumn(f: org.apache.spark.sql.sources.Filter) =
-    GraftFilters.filterToColumn(f)
-
   override def canDeleteWhere(filters: Array[org.apache.spark.sql.sources.Filter])
-      : Boolean = filters.forall(f => filterToColumn(f).isDefined)
+      : Boolean = filters.forall(f => GraftFilters.filterToColumn(f).isDefined)
 
   /** SQL UPDATE / MERGE (and DELETEs `canDeleteWhere` rejects, e.g. with
     * subqueries) via Spark's row-level-operation framework — group-based
@@ -1702,10 +1699,8 @@ private[graftglue] trait GraftV1Writable extends Table with SupportsWrite
     * victims resolved by `_row_id` under the predicate, file-pruned rewrite,
     * manifest CAS publish. */
   override def deleteWhere(filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
-    import org.apache.spark.sql.functions.lit
-    val pred = filters.flatMap(filterToColumn)
-      .foldLeft(lit(true))(_ && _)
-    inTx(_.deleteWhere(pred))
+    inTx(_.deleteWhere(GraftFilters.conjunction(filters.toSeq)
+      .getOrElse(org.apache.spark.sql.functions.lit(true))))
   }
 
   abstract override def capabilities(): util.Set[TableCapability] = {
@@ -1764,9 +1759,9 @@ private[graftglue] class OperationStrippingWriterFactory(
   }
 }
 
-/** Shared glue helpers: V1 Filter -> Column translation and the one-shot
+/** Shared glue helpers: filter -> Column translation and the one-shot
   * transaction wrapper both the V1 write surface and the row-level COW use. */
-private[graftglue] object GraftFilters {
+object GraftFilters {
 
   def inTx[T](root: String, ident: Identifier)(body: graft.api.Table => T): T = {
     val ns = ident.namespace()
@@ -1805,6 +1800,23 @@ private[graftglue] object GraftFilters {
       case _ => None
     }
   }
+
+  /** The AND of the filters `filterToColumn` can express (None: none can),
+    * a weaker condition sound for `graft.api.Table.planFiles`. */
+  def conjunction(filters: Seq[org.apache.spark.sql.sources.Filter])
+      : Option[org.apache.spark.sql.Column] =
+    filters.flatMap(filterToColumn).reduceOption(_ && _)
+
+  /** [[conjunction]] of Catalyst filters (the SQL scan builder's, the
+    * changefeed's), each attribute renamed by `names` first. */
+  def fromCatalyst(filters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+                   names: String => String = identity)
+      : Option[org.apache.spark.sql.Column] =
+    conjunction(filters.flatMap(e => org.apache.spark.sql.execution.datasources
+      .DataSourceStrategy.translateFilter(e.transform {
+        case a: org.apache.spark.sql.catalyst.expressions.AttributeReference =>
+          a.withName(names(a.name))
+      }, supportNestedPredicatePushdown = true)))
 }
 
 /**
@@ -1814,8 +1826,9 @@ private[graftglue] object GraftFilters {
  *
  *  - the operation PINS the table's manifest version at creation; its scan
  *    reads exactly that file set;
- *  - pushed filters are used for STATIC GROUP PRUNING ONLY: zone maps keep
- *    or drop whole FILES, never rows (`pushedFilters()` reports nothing as
+ *  - pushed filters are used for STATIC GROUP PRUNING ONLY: the file
+ *    planner (`Table.planFiles`: zone maps, IN sets, buckets) keeps or
+ *    drops whole FILES, never rows (`pushedFilters()` reports nothing as
  *    handled, so matching semantics stay with Spark) — pruned-out files are
  *    carried into the new manifest version verbatim;
  *  - the replacement rows for the scanned groups are written by Spark's own
@@ -1842,7 +1855,7 @@ private[graftglue] class GraftGroupCowOperation(
     StructField("_row_id", LongType, nullable = false))
 
   /** Files the scan reads (groups being replaced); starts as ALL files and
-    * shrinks under zone-map pruning when filters are pushed. The write's
+    * shrinks under file planning when filters are pushed. The write's
     * commit keeps `manifest.files -- scanned` untouched. */
   @volatile private var scanned: Seq[graft.api.Manifest.FileEntry] = manifest.files
 
@@ -1856,11 +1869,8 @@ private[graftglue] class GraftGroupCowOperation(
         // group pruning only — sound because files are either fully
         // rewritten (scanned) or fully kept (pruned out); a file with ANY
         // possibly-matching row is conservatively kept in the scan
-        // (zone-map stats are looked up through each file's rename map)
-        val cond = filters.flatMap(GraftFilters.filterToColumn)
-          .reduceOption(_ && _)
-        cond.foreach(c =>
-          scanned = graft.api.Table.pruneByZoneMaps(manifest.files, c))
+        GraftFilters.conjunction(filters.toSeq).foreach(c =>
+          scanned = graft.api.Table.planFiles(manifest, c))
         filters // nothing handled at row level; Spark keeps the semantics
       }
 
@@ -1876,8 +1886,10 @@ private[graftglue] class GraftGroupCowOperation(
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
       override def build(): Write = new Write {
+        // a full UUID, like `b-` batch dirs: operations sharing a dir would
+        // adopt (and on abort delete) each other's staged files
         private val staged = tdir.resolve("data")
-          .resolve("sqlcow-" + java.util.UUID.randomUUID().toString.take(8))
+          .resolve("sqlcow-" + java.util.UUID.randomUUID())
         private val parquetWrite = ParquetWrite(
           Seq(staged.toString), "parquet", _ => true, info)
 

@@ -15,35 +15,26 @@ import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey,
   SupportsRuntimeFiltering}
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning,
   Partitioning, UnknownPartitioning}
-import org.apache.spark.sql.execution.datasources.{DataSourceStrategy, FilePartition}
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
-import org.apache.spark.sql.sources.{And, EqualTo, Filter, In}
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
 /**
- * The SQL table of every manifest, with manifest zone-map FILE pruning: the
- * scan builder intercepts pushed filters, drops whole files whose
- * per-column min/max envelopes cannot match
- * (`graft.api.Table.pruneByZoneMaps` — the same pruning the API scan
- * applies in `Table.select`), and only then hands off to Spark's own
- * parquet builder over the kept paths. Parquet row-group pruning still
- * happens INSIDE each kept file (filters are forwarded verbatim), so this
- * adds the layer parquet cannot provide at 100 TB: not opening — not even
- * for a footer read — the files the manifest already proves empty for the
- * predicate. On a z-ordered or sorted table a selective SELECT through the
- * SQL catalog then touches a handful of files out of thousands, with zero
- * extra I/O spent deciding so.
+ * The SQL table of every manifest. Its scan builder opens only the files
+ * the file planner (`graft.api.Table.planFiles`, the one rule every reader
+ * prunes by) keeps for the pushed filters, then hands off to Spark's own
+ * parquet builder over the kept paths; parquet row-group pruning still
+ * happens inside each kept file (filters are forwarded verbatim).
  *
  * A scan that a FRESH projection covers reads the projection instead (the
  * reference server's transparent projection selection,
- * vastdb/tests/test_projections.py:102-125); every other scan keeps all
- * pruning layers — a projection never switches them off. Nor does a lazy
- * rename (the reference's transparent rename, vastdb/table.py:1010-1038):
- * when a kept file carries a rename map, the kept files are read per
- * rename group ([[RenameGroups]]), and zone-map stats are looked up
- * through `FileEntry.physicalName`.
+ * vastdb/tests/test_projections.py:102-125) and prunes no files; every
+ * other scan is planned. When a kept file carries a rename map (the
+ * reference's transparent rename, vastdb/table.py:1010-1038), the kept
+ * files are read per rename group ([[RenameGroups]]).
  */
 private[graftglue] class ZoneMapTable(
     tableName: String, tableSchema: StructType, tdir: java.nio.file.Path,
@@ -119,28 +110,13 @@ private[graftglue] class ZoneMapScanBuilder(
   }
 
   override def pushFilters(filters: Seq[Expression]): Seq[Expression] = {
-    if (inner == null) {
-      // file pruning is keep-conservative: untranslatable filters prune
-      // nothing, and matching semantics stay entirely with Spark — the
-      // forwarded filters (and the post-scan residual Spark keeps) are
-      // evaluated over the kept files exactly as without this layer
-      val v1 = filters.flatMap(e => DataSourceStrategy.translateFilter(
-        e, supportNestedPredicatePushdown = true))
-      val cond = v1.flatMap(GraftFilters.filterToColumn).reduceOption(_ && _)
-      cond.foreach(c => kept = graft.api.Table.pruneByZoneMaps(kept, c))
-      kept = graft.api.Table.pruneByBucket(kept, tableSchema, m.bucketKeys,
-        m.bucketCount, v1.flatMap(conjuncts).collect {
-          case EqualTo(c, v) if v != null => (c, Seq(v))
-          case In(c, vs) => (c, vs.toSeq)
-        })
-    }
+    // keep-conservative: the forwarded filters (and Spark's post-scan
+    // residual) still decide which rows of the kept files match
+    if (inner == null)
+      GraftFilters.fromCatalyst(filters).foreach(c =>
+        kept = graft.api.Table.planFiles(m, c))
     savedFilters = filters
     innerB.pushFilters(filters)
-  }
-
-  private def conjuncts(f: Filter): Seq[Filter] = f match {
-    case And(l, r) => conjuncts(l) ++ conjuncts(r)
-    case o => Seq(o)
   }
 
   override def pushedFilters
@@ -182,8 +158,7 @@ private[graftglue] class ZoneMapScanBuilder(
       // changes results; the filters stay post-scan residuals either way
       case Some(p) => replay(RenameGroups.parquet(tableName, tableSchema,
         Seq(graft.api.Table.resolvePath(tdir, p.dir)), options))
-      case None => new ZoneMapRuntimeScan(this, tableName, kept, innerB.build(),
-        m.bucketKeys, m.bucketCount)
+      case None => new ZoneMapRuntimeScan(this, tableName, m, kept, innerB.build())
     }
   }
 }
@@ -191,15 +166,11 @@ private[graftglue] class ZoneMapScanBuilder(
 /**
  * Scan wrapper adding RUNTIME file pruning (`SupportsRuntimeFiltering`):
  * when this table is the big side of a join whose other side carries a
- * selective filter, Spark's dynamic-partition-pruning planner ships the
- * surviving join keys here as an `IN` filter after the build side executes
- * — and the manifest zone maps then drop whole fact FILES before a single
- * byte is read. Static pruning handles WHERE k < c; this handles
- * `fact JOIN dim ON fact.k = dim.k WHERE dim.attr = x`, the dominant scan
- * shape of a star-schema query at 100 TB, where the selective predicate
- * sits on the wrong table for static pruning. Membership is tested
- * per-value (`Table.pruneByInSet`), not by collapsing the key set to an
- * envelope — scattered surviving keys keep ~|keys| files, not a range.
+ * selective filter (`fact JOIN dim ON fact.k = dim.k WHERE dim.attr = x`),
+ * Spark's dynamic-partition-pruning planner ships the surviving join keys
+ * here as an `IN` filter after the build side executes, and the file
+ * planner (`Table.planFiles`, per-value IN membership) drops whole fact
+ * files before a byte is read: scattered keys keep ~|keys| files.
  *
  * The wrapper delegates everything else to the inner scan (parquet, or
  * one parquet scan per rename group) and REBUILDS it over the reduced file
@@ -211,8 +182,8 @@ private[graftglue] class ZoneMapScanBuilder(
  */
 class ZoneMapRuntimeScan private[graftglue] (
     builder: ZoneMapScanBuilder, private val tableName: String,
-    initialKept: Seq[graft.api.Manifest.FileEntry], initialScan: Scan,
-    bucketKeys: Seq[String] = Nil, bucketCount: Int = 0)
+    m: graft.api.Manifest.TableManifest,
+    initialKept: Seq[graft.api.Manifest.FileEntry], initialScan: Scan)
     extends Scan with Batch
     with SupportsRuntimeFiltering with SupportsReportStatistics
     with SupportsReportPartitioning {
@@ -238,7 +209,7 @@ class ZoneMapRuntimeScan private[graftglue] (
    * so the feature is strictly opt-in.
    */
   private val bucketGroups: Option[Seq[Int]] =
-    if (bucketKeys.nonEmpty && bucketCount > 0 && initialKept.nonEmpty &&
+    if (m.bucketKeys.nonEmpty && m.bucketCount > 0 && initialKept.nonEmpty &&
         initialKept.forall(f => f.bucket >= 0 && f.renames.isEmpty) &&
         org.apache.spark.sql.internal.SQLConf.get.v2BucketingEnabled)
       Some(initialKept.map(_.bucket).distinct.sorted)
@@ -256,7 +227,7 @@ class ZoneMapRuntimeScan private[graftglue] (
    */
   override def outputPartitioning(): Partitioning = bucketGroups match {
     case Some(groups) => new KeyGroupedPartitioning(
-      Array(Expressions.bucket(bucketCount, bucketKeys: _*)), groups.size)
+      Array(Expressions.bucket(m.bucketCount, m.bucketKeys: _*)), groups.size)
     case None => new UnknownPartitioning(0)
   }
 
@@ -306,13 +277,8 @@ class ZoneMapRuntimeScan private[graftglue] (
 
   override def filter(filters: Array[Filter]): Unit = {
     val before = kept.size
-    filters.foreach {
-      case In(col, values) =>
-        kept = graft.api.Table.pruneByInSet(kept, col, values.toSeq)
-      case f =>
-        GraftFilters.filterToColumn(f).foreach(c =>
-          kept = graft.api.Table.pruneByZoneMaps(kept, c))
-    }
+    GraftFilters.conjunction(filters.toSeq).foreach(c =>
+      kept = graft.api.Table.planFiles(m, c, Some(kept)))
     runtimePruned = Some((before, kept.size))
     if (kept.size < before) inner = builder.buildOver(kept)
   }

@@ -204,19 +204,19 @@ class CatalogSpec extends SparkSpec {
       batch(0); batch(100); batch(200); batch(400)
       val all = t.manifest.files
       assert(all.forall(_.colStats.contains("a")))
-      val pruned = t.pruneByZoneMaps(all, col("a") >= 100L && col("a") < 110L)
+      val pruned = Table.pruneByZoneMaps(all, col("a") >= 100L && col("a") < 110L)
       assert(pruned.size < all.size, s"no pruning: ${all.size} files kept")
       // results identical to the unpruned scan
       assert(t.select(Seq("a"), col("a") >= 100L && col("a") < 110L).count() == 10)
       // equality constraint prunes to a single range
-      assert(t.pruneByZoneMaps(all, col("a") === 205L).size < all.size)
+      assert(Table.pruneByZoneMaps(all, col("a") === 205L).size < all.size)
       // OR-group / IN-list envelopes (the reference's AND-of-OR-groups
       // grammar): each collapses to [lo, hi]; every file fully outside the
       // envelope must be pruned, none inside may be
       def span(f: Manifest.FileEntry): (Long, Long) =
         (f.colStats("a").min.toLong, f.colStats("a").max.toLong)
       def check(pred: org.apache.spark.sql.Column, lo: Long, hi: Long): Unit = {
-        val kept = t.pruneByZoneMaps(all, pred)
+        val kept = Table.pruneByZoneMaps(all, pred)
         assert(kept.size < all.size, s"no envelope pruning for $pred")
         assert(kept.forall { f => val (mn, mx) = span(f); mx >= lo && mn <= hi },
           s"kept an out-of-envelope file for $pred")
@@ -229,7 +229,7 @@ class CatalogSpec extends SparkSpec {
       // results stay exact through the envelope-pruned scan
       assert(t.select(Seq("a"), col("a").isin(101L, 108L, 300L)).count() == 2)
       // different-column OR must NOT prune (no common envelope)
-      assert(t.pruneByZoneMaps(all,
+      assert(Table.pruneByZoneMaps(all,
         col("a") === 3L || col("b") > 1000f).size == all.size)
     }
   }
@@ -506,6 +506,30 @@ class CatalogSpec extends SparkSpec {
       assert(t.selectAt(1).count() == 3)
       assert(t.selectAt(0).count() == 0)
       intercept[MissingTable] { t.selectAt(99) }
+    }
+  }
+
+  test("time travel plans files: selectAt opens only the matching file") {
+    val s = freshSession()
+    s.createBucket("b")
+    s.transaction(_.bucket("b").createSchema("m").createTable("t", f1Schema))
+    // one file per commit, disjoint ranges of `a`: v1..v4
+    for (lo <- Seq(0L, 100L, 200L, 300L)) s.transaction { tx =>
+      val l = new java.util.ArrayList[Row]()
+      (lo until lo + 10).foreach(i => l.add(Row(i, i.toFloat, s"r$i")))
+      tx.bucket("b").schema("m").table("t").insert(spark.createDataFrame(l, f1Schema))
+    }
+    s.transaction { tx =>
+      val t = tx.bucket("b").schema("m").table("t")
+      t.insert(spark.createDataFrame(java.util.List.of(Row(205L, 0f, "late")), f1Schema))
+      val v3 = 3L
+      val df = t.selectAt(v3, Seq("s"), col("a") === 205L)
+      assert(df.collect().map(_.getString(0)).toSeq == Seq("r205"))
+      val file = t.manifest.files.filter(_.colStats("a").min == "200")
+      assert(file.size == 1)
+      assert(df.inputFiles.toSeq.map(f => new java.net.URI(f).getPath) ==
+        Seq(Table.resolvePath(t.dir, file.head.path)),
+        s"selectAt read ${df.inputFiles.toSeq}")
     }
   }
 

@@ -1670,4 +1670,87 @@ class GraftStreamSourceSpec extends SparkSpec {
       }
     }
   }
+
+  /** `lo + j, "r<tag>-j"` for j < n, one file, under column names `names`. */
+  private def insertRows(s: VastSession, lo: Long, n: Int, tag: Int,
+                         names: (String, String) = ("a", "s")): Unit =
+    s.transaction { tx =>
+      val l = new java.util.ArrayList[Row]()
+      (0 until n).foreach(j => l.add(Row(lo + j, s"r$tag-$j")))
+      tx.bucket("bk").schema("m").table("t").insert(spark.createDataFrame(l,
+        StructType(Seq(StructField(names._1, LongType),
+          StructField(names._2, StringType)))).coalesce(1))
+    }
+
+  /** The files behind every planned input partition of `plan`'s scans. */
+  private def plannedFiles(plan: org.apache.spark.sql.execution.SparkPlan): Seq[String] =
+    plan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b.inputPartitions
+      case b: org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec =>
+        b.inputPartitions
+    }.flatten.flatMap {
+      case p: org.apache.spark.sql.graftglue.GroupPartition => p.inner match {
+        case fp: org.apache.spark.sql.execution.datasources.FilePartition =>
+          fp.files.map(_.filePath.toString).toSeq
+        case other => Seq(other.toString)
+      }
+      case other => Seq(other.toString)
+    }
+
+  private val wantRows = (2000L until 2010L) ++ (3000L until 3010L) :+ 4000L
+
+  test("a filtered changefeed batch plans only the files that can match") {
+    val root = Files.createTempDirectory("graft-feed-plan").toString
+    val s = VastSession(spark, root)
+    s.createBucket("bk")
+    s.transaction(tx => tx.bucket("bk").createSchema("m").createTable("t", schema))
+    // four single-file commits over disjoint ranges of a, a lazy rename of
+    // a to k, one more file: 5 files in 2 rename groups, 2 of them k < 2000
+    (0 until 4).foreach(i => insertRows(s, i * 1000L, 10, i))
+    s.transaction(_.bucket("bk").schema("m").table("t").renameColumn("a", "k"))
+    insertRows(s, 4000L, 1, 4, ("k", "s"))
+    val feed = spark.read.format("graft").option("startingVersion", "earliest")
+      .load(Paths.get(root, "bk", "m", "t").toString).where(col("k") >= 2000)
+    val got = feed.collect().map(_.getLong(0)).sorted.toSeq
+    assert(got == wantRows, s"wrong rows: $got")
+    val files = plannedFiles(feed.queryExecution.executedPlan)
+    assert(files.size == 3, s"planned ${files.size} of 5 files: $files")
+  }
+
+  test("a micro-batch that crosses a rename plans only the files that can match") {
+    val root = Files.createTempDirectory("graft-feed-plan-rn").toString
+    val s = VastSession(spark, root)
+    s.createBucket("bk")
+    s.transaction(tx => tx.bucket("bk").createSchema("m").createTable("t", schema))
+    insertRows(s, 0L, 10, 0)
+    val tdir = Paths.get(root, "bk", "m", "t").toString
+    val ckpt = Files.createTempDirectory("graft-feed-plan-ck").toString
+    val out = Files.createTempDirectory("graft-feed-plan-out").toString + "/sink"
+    // pinned to (a, s) here; both queries below run this same frame, so
+    // the second one's batch reads the pinned name across the rename
+    val df = spark.readStream.format("graft").load(tdir).where(col("a") >= 2000)
+    def drain() = {
+      val q = df.writeStream.format("parquet").option("path", out)
+        .option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination(120000)
+      q
+    }
+    drain()
+    insertRows(s, 1000L, 10, 1)
+    insertRows(s, 2000L, 10, 2)
+    s.transaction(_.bucket("bk").schema("m").table("t").renameColumn("a", "k"))
+    insertRows(s, 3000L, 10, 3, ("k", "s"))
+    insertRows(s, 4000L, 1, 4, ("k", "s"))
+    // one micro-batch over the 4 new files: 2 written as a, 2 as k
+    val q = drain()
+    val last = q.recentProgress.filter(_.numInputRows > 0)
+    assert(last.length == 1, s"expected one data batch, got ${last.length}")
+    val exec = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime
+      .StreamingQueryWrapper].streamingQuery.lastExecution
+    val files = plannedFiles(exec.executedPlan)
+    assert(files.size == 3, s"planned ${files.size} of 4 files: $files")
+    val got = spark.read.parquet(out).select("a").collect().map(_.getLong(0)).sorted.toSeq
+    assert(got == wantRows, s"wrong rows: $got")
+  }
 }

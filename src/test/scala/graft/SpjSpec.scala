@@ -244,6 +244,48 @@ class SpjSpec extends SparkSpec {
     }
   }
 
+  test("API IN lookups and SQL UPDATE prune a bucketed table by bucket") {
+    val root = Files.createTempDirectory("graft-spju").toString
+    val s = VastSession(spark, root)
+    s.createBucket("bk")
+    s.transaction(tx => tx.bucket("bk").createSchema("m"))
+    mkTable(s, "t", 4000, seed = 9)
+    s.transaction { tx =>
+      val t = tx.bucket("bk").schema("m").table("t")
+      t.addBucketLayout(8, Seq("k"))
+      t.optimizeBuckets(250) // 16 files: 2 per bucket
+    }
+    def keys(k: Long): Long = (0 until 4000).count(i => ((i * 2654435761L + 9) % 997).abs == k)
+    def files(): Map[String, Int] = {
+      var f = Map.empty[String, Int]
+      s.transaction(tx => f = tx.bucket("bk").schema("m").table("t")
+        .manifest.files.map(e => e.path -> e.bucket).toMap)
+      f
+    }
+    val before = files()
+    val perBucket = before.groupBy(_._2).values.map(_.size).max
+    s.transaction { tx =>
+      val df = tx.bucket("bk").schema("m").table("t").select(Seq("k", "v"),
+        org.apache.spark.sql.functions.col("k").isin(123L, 456L, 789L))
+      assert(df.inputFiles.length <= 3 * perBucket,
+        s"API IN lookup read ${df.inputFiles.length} of ${before.size} files")
+      assert(df.count() == keys(123L) + keys(456L) + keys(789L))
+    }
+    spark.conf.set("spark.sql.catalog.graftsu",
+      "org.apache.spark.sql.graftglue.GraftSqlCatalog")
+    spark.conf.set("spark.sql.catalog.graftsu.root", root)
+    spark.sql("UPDATE graftsu.bk.m.t SET v = -1.0 WHERE k = 123")
+    val after = files()
+    val rewritten = before.keySet -- after.keySet
+    assert(rewritten.nonEmpty && rewritten.map(before).size == 1,
+      s"UPDATE rewrote files of buckets ${rewritten.map(before)}")
+    val other = before.filter(_._2 != before(rewritten.head)).keySet
+    assert(other.subsetOf(after.keySet),
+      s"UPDATE moved ${(other -- after.keySet).size} files of other buckets")
+    assert(spark.sql("SELECT count(*) FROM graftsu.bk.m.t WHERE v = -1.0")
+      .head.getLong(0) == keys(123L))
+  }
+
   test("fuzz: DML churn + rebucketing keep SPJ joins correct in every state") {
     val rnd = new scala.util.Random(4242)
     val root = Files.createTempDirectory("graft-spjf").toString

@@ -258,6 +258,33 @@ class SqlCatalogSpec extends SparkSpec {
     }
   }
 
+  test("SQL UPDATE stages its files under a full-UUID sqlcow- directory") {
+    val root = Files.createTempDirectory("graft-sqlcow").toString
+    val s = VastSession(spark, root)
+    s.createBucket("bk")
+    s.transaction { tx =>
+      val t = tx.bucket("bk").createSchema("m").createTable("u", schema)
+      val l = new java.util.ArrayList[Row]()
+      (0 until 10).foreach(i => l.add(Row(i.toLong, s"v$i")))
+      t.insert(spark.createDataFrame(l, schema).coalesce(1))
+    }
+    spark.conf.set("spark.sql.catalog.graftcow",
+      "org.apache.spark.sql.graftglue.GraftSqlCatalog")
+    spark.conf.set("spark.sql.catalog.graftcow.root", root)
+    def files(): Set[String] = {
+      var f: Set[String] = Set.empty
+      s.transaction(tx =>
+        f = tx.bucket("bk").schema("m").table("u").manifest.files.map(_.path).toSet)
+      f
+    }
+    val before = files()
+    spark.sql("UPDATE graftcow.bk.m.u SET s = 'updated' WHERE a = 3")
+    val added = files() -- before
+    val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"
+    assert(added.nonEmpty && added.forall(_.matches(s"(.*/)?data/sqlcow-$uuid/[^/]+")),
+      s"staged paths: $added")
+  }
+
   test("SQL DDL: CREATE TABLE, CTAS, RENAME, DROP through the transactional API") {
     val root = Files.createTempDirectory("graft-sqlddl").toString
     val s = VastSession(spark, root)
@@ -481,7 +508,7 @@ class SqlCatalogSpec extends SparkSpec {
       assert(t.manifest.clusteringKeys == Seq("x", "y"))
       assert(t.stats.sortingDone)
       val all = t.manifest.files
-      assert(t.pruneByZoneMaps(all, col("y") < 10L).size < all.size)
+      assert(Table.pruneByZoneMaps(all, col("y") < 10L).size < all.size)
     }
     assert(spark.sql(
       "SELECT count(*) FROM graftz.bk.m.t WHERE x BETWEEN 5 AND 15 AND y < 20")

@@ -56,16 +56,16 @@ class ZorderSpec extends SparkSpec {
       assert(all.size >= 8, s"want a multi-file layout, got ${all.size}")
       assert(all.forall(f => f.colStats.contains("x") && f.colStats.contains("y")))
       // a tight 2-D box hits a handful of curve segments, not every file
-      val box = t.pruneByZoneMaps(all,
+      val box = Table.pruneByZoneMaps(all,
         col("x").between(10L, 30L) && col("y").between(10L, 30L))
       assert(box.size <= all.size / 2,
         s"2-D box kept ${box.size} of ${all.size} files")
       // the second key ALONE prunes too — the property a lead-column sort
       // cannot give
-      val yOnly = t.pruneByZoneMaps(all, col("y") < 25L)
+      val yOnly = Table.pruneByZoneMaps(all, col("y") < 25L)
       assert(yOnly.size < all.size,
         s"y-only predicate kept all ${all.size} files")
-      val xOnly = t.pruneByZoneMaps(all, col("x") < 25L)
+      val xOnly = Table.pruneByZoneMaps(all, col("x") < 25L)
       assert(xOnly.size < all.size,
         s"x-only predicate kept all ${all.size} files")
       // pruned scans stay exact
@@ -82,9 +82,9 @@ class ZorderSpec extends SparkSpec {
       t2.optimizeSort(targetFileRows = 1250L)
       val all2 = t2.manifest.files
       assert(all2.size >= 8)
-      assert(t2.pruneByZoneMaps(all2, col("y") < 25L).size == all2.size,
+      assert(Table.pruneByZoneMaps(all2, col("y") < 25L).size == all2.size,
         "sort-by-x unexpectedly pruned on y — contrast premise broken")
-      assert(t2.pruneByZoneMaps(all2, col("x") < 25L).size < all2.size)
+      assert(Table.pruneByZoneMaps(all2, col("x") < 25L).size < all2.size)
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
@@ -136,7 +136,7 @@ class ZorderSpec extends SparkSpec {
       assert(t.select(Seq("v"), pred).count() == 10,
         "ntz zone maps over-pruned under a non-UTC session timezone")
       // and the pruning is still effective (not just disabled)
-      assert(t.pruneByZoneMaps(all, pred).size == 1)
+      assert(Table.pruneByZoneMaps(all, pred).size == 1)
     } finally spark.conf.set("spark.sql.session.timeZone", prevTz)
   }
 
