@@ -2600,23 +2600,29 @@ object Table {
     * still evaluates `cond` over the kept files. */
   def planFiles(m: TableManifest, cond: Column,
                 files: Option[Seq[FileEntry]] = None): Seq[FileEntry] = {
-    val sets = Glue.valueSets(cond)
-    val byValue = sets.foldLeft(pruneByZoneMaps(files.getOrElse(m.files), cond)) {
+    val tree = Glue.predicateTree(cond) // converted once for all three rules
+    val sets = Glue.valueSets(tree)
+    val byValue = sets.foldLeft(
+        pruneByZoneMaps(files.getOrElse(m.files), Glue.rangeConstraints(tree))) {
       case (kept, (c, vs)) => pruneByInSet(kept, c, vs)
     }
     pruneByBucket(byValue, m.schema, m.bucketKeys, m.bucketCount, sets)
   }
 
+  /** [[pruneByZoneMaps]] on the range constraints of `predicate`. */
+  def pruneByZoneMaps(entries: Seq[FileEntry], predicate: Column): Seq[FileEntry] =
+    pruneByZoneMaps(entries, Glue.rangeConstraints(Glue.predicateTree(predicate)))
+
   /** Zone-map file pruning: drop files whose per-column min/max provably
-    * can't satisfy a top-level range constraint (constraints extracted from
-    * the unresolved Column tree by Glue.rangeConstraints). Stats are keyed
+    * can't satisfy a top-level range constraint `(column, op, value)`
+    * (extracted from the predicate by Glue.rangeConstraints). Stats are keyed
     * by PHYSICAL name, so each logical column is looked up through the
     * file's rename map ([[FileEntry.physicalName]]). Conservative —
     * missing stats keep the file; exactness comes from the scan's own
     * filter (or, for the SQL row-level COW, from whole-file group
     * replacement: pruning only ever KEEPS whole files, never drops rows). */
-  def pruneByZoneMaps(entries: Seq[FileEntry], predicate: Column): Seq[FileEntry] = {
-    val cons = Glue.rangeConstraints(predicate)
+  def pruneByZoneMaps(entries: Seq[FileEntry],
+                      cons: Seq[(String, String, Any)]): Seq[FileEntry] = {
     if (cons.isEmpty) return entries
     entries.filter { f =>
       cons.forall { case (c, op, raw) =>
@@ -2647,8 +2653,9 @@ object Table {
       case "double" => v.asInstanceOf[Number].doubleValue.compareTo(bound.toDouble)
       // UTF-8 binary order, matching the Spark min/max that produced
       // the stats — String.compareTo (UTF-16 code units) disagrees on
-      // supplementary-plane chars and could prune matching files
-      case _ => org.apache.spark.unsafe.types.UTF8String.fromString(v.toString)
+      // supplementary-plane chars and could prune matching files. A number
+      // or date against a string column casts the COLUMN ("05" = 5): keep
+      case _ => org.apache.spark.unsafe.types.UTF8String.fromString(v.asInstanceOf[String])
         .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(bound))
     }
     // a truncated string max is only a prefix of the true max —
@@ -2674,8 +2681,8 @@ object Table {
     * before a single footer is read. Conjuncts must all hold, so the kept
     * bucket set is the intersection; nulls match nothing. Conservative:
     * requires a complete layout (a post-rewrite DML file carries no bucket
-    * id → no pruning), and a value that does not convert losslessly to the
-    * key's type keeps every file. Called only by [[planFiles]]. */
+    * id → no pruning), and a value Spark would not compare by casting it
+    * to the key's type keeps every file. Called only by [[planFiles]]. */
   def pruneByBucket(entries: Seq[FileEntry], schema: StructType,
                     bucketKeys: Seq[String], bucketCount: Int,
                     valueSets: Seq[(String, Seq[Any])]): Seq[FileEntry] = {
@@ -2688,10 +2695,12 @@ object Table {
     if (sets.isEmpty) return entries
     def bucketOf(v: Any): Int = {
       // Murmur3 hashes by runtime class (Int 24 and Long 24 differ): cast
-      // a value to the key's type first, and only where that is lossless
+      // a value to the key's type first, only by numeric widening, as Spark
+      // does (a number against a string key casts the KEY: "05" = 5)
       import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
       val l = Literal(v)
-      if (l.dataType != keyType && !Cast.canUpCast(l.dataType, keyType))
+      if (l.dataType != keyType && !(l.dataType.isInstanceOf[NumericType] &&
+          keyType.isInstanceOf[NumericType] && Cast.canUpCast(l.dataType, keyType)))
         throw new IllegalArgumentException(s"$v is no ${keyType.simpleString}")
       val h = org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction
         .hash(Cast(l, keyType).eval(), keyType, 42).toInt
@@ -2746,11 +2755,8 @@ object Table {
       }
       if (conv.forall(_.isDefined)) Some(conv.flatten.toArray.sorted) else None
     }
-    lazy val doubles: Option[Array[Double]] = vs.forall(_.isInstanceOf[Number])
-      match {
-        case true => Some(vs.map(_.asInstanceOf[Number].doubleValue).toArray.sorted)
-        case false => None
-      }
+    lazy val doubles: Option[Array[Double]] = Option.when(vs.forall(_.isInstanceOf[Number]))(
+      vs.map(_.asInstanceOf[Number].doubleValue).toArray.sorted)
     lazy val strings: Option[Array[org.apache.spark.unsafe.types.UTF8String]] =
       if (vs.forall(_.isInstanceOf[String]))
         Some(vs.map(v => org.apache.spark.unsafe.types.UTF8String

@@ -59,11 +59,6 @@ object Glue {
       LocalRelation(rel.output :+ AttributeReference(name, LongType, nullable = false)(), rows))
   }
 
-  /** Fully convert a Column to a catalyst expression tree (the lazy
-    * `expression` wrapper defers conversion, hiding the node structure). */
-  def catalystExpression(c: Column): Expression =
-    org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
-
   /** A clone of `spark` sharing the SparkContext, catalog state, and runtime
     * conf values, but with an independent SQLConf: scan-scoped knobs (e.g.
     * `spark.sql.files.maxPartitionBytes`) set on the clone are consulted at
@@ -78,22 +73,24 @@ object Glue {
   }
 
   /** True iff the column is the literal TRUE (the no-op predicate). */
-  def isLiteralTrue(c: Column): Boolean = catalystExpression(c) match {
+  def isLiteralTrue(c: Column): Boolean = resolvableExpression(c) match {
     case org.apache.spark.sql.catalyst.expressions.Literal(true, _) => true
     case _ => false
   }
 
   /** Root column names referenced by a (possibly unresolved) Column. */
   def referencedRoots(c: Column): Set[String] =
-    catalystExpression(c).collect {
+    resolvableExpression(c).collect {
       case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
         a.nameParts.head
     }.toSet
 
   /** `c` with its comparison, IN, AND and OR calls (unresolved functions
-    * before analysis) as expression nodes: one match covers both spellings. */
-  private def predicateTree(c: Column): Expression =
-    catalystExpression(c).transformUp {
+    * before analysis) as expression nodes: one match covers both spellings.
+    * Only subtrees holding a call are walked, not an IN's literals. */
+  def predicateTree(c: Column): Expression =
+    resolvableExpression(c).transformUpWithPruning(
+        _.containsPattern(org.apache.spark.sql.catalyst.trees.TreePattern.UNRESOLVED_FUNCTION)) {
       case f: UnresolvedFunction if f.nameParts.nonEmpty =>
         (f.nameParts.last, f.arguments) match {
           case (">", Seq(l, r)) => GreaterThan(l, r)
@@ -137,18 +134,16 @@ object Glue {
 
   /** `column IN (literal, …)`: the column and its literals. */
   private def inList(v: Expression, list: Seq[Expression])
-      : Option[(String, Seq[Literal])] = for {
-    a <- attrOf(v)
-    ls <- list.foldLeft(Option(Seq.empty[Literal])) { (acc, e) =>
-      acc.flatMap(s => literalOf(e).map(s :+ _))
-    }
-  } yield (a, ls)
+      : Option[(String, Seq[Literal])] = attrOf(v).flatMap { a =>
+    val ls = list.map(literalOf) // one pass: a runtime key set can be 10^5 long
+    if (ls.forall(_.isDefined)) Some((a, ls.flatten)) else None
+  }
 
   /** The value set each top-level `=` or `IN` conjunct restricts a column
     * to, in external (Scala) form. An `=` NULL yields no set; an IN keeps
     * its NULLs (both pruning rules that take value sets skip them). */
-  def valueSets(c: Column): Seq[(String, Seq[Any])] =
-    conjuncts(predicateTree(c)).flatMap {
+  def valueSets(tree: Expression): Seq[(String, Seq[Any])] =
+    conjuncts(tree).flatMap {
       case EqualTo(l, r) => inList(l, Seq(r)).orElse(inList(r, Seq(l)))
         .filterNot(_._2.head.value == null)
       case In(v, list) => inList(v, list)
@@ -158,9 +153,9 @@ object Glue {
     }
 
   /** Top-level-AND range constraints (column, op, literal-value) from an
-    * unresolved predicate Column; foldable non-attribute sides (literals,
+    * unresolved [[predicateTree]]; foldable non-attribute sides (literals,
     * casted literals) are evaluated here. */
-  def rangeConstraints(c: Column): Seq[(String, String, Any)] = {
+  def rangeConstraints(tree: Expression): Seq[(String, String, Any)] = {
     def flip(op: String) = op match {
       case ">" => "<"; case ">=" => "<="; case "<" => ">"; case "<=" => ">="
       case o => o
@@ -208,7 +203,7 @@ object Glue {
       for {
         (a, ls) <- inList(v, list)
         vs = ls.map(_.value)
-        if !vs.contains(null)
+        if vs.nonEmpty && !vs.contains(null) // a runtime IN may carry no keys
         lo <- extreme(vs, wantMin = true)
         hi <- extreme(vs, wantMin = false)
       } yield (a, Some(lo), Some(hi))
@@ -241,7 +236,7 @@ object Glue {
         case (le, re) => le.orElse(re)
       }
     // each comparison as itself, OR-groups and IN-lists as their envelopes
-    conjuncts(predicateTree(c)).flatMap(e => comparison(e).map(Seq(_)).getOrElse(
+    conjuncts(tree).flatMap(e => comparison(e).map(Seq(_)).getOrElse(
       env(e).toSeq.flatMap { case (a, lo, hi) =>
         lo.map(v => (a, ">=", v)).toSeq ++ hi.map(v => (a, "<=", v)).toSeq
       }))

@@ -1777,6 +1777,7 @@ object GraftFilters {
       : Option[org.apache.spark.sql.Column] = {
     import org.apache.spark.sql.functions.{col, lit, not}
     import org.apache.spark.sql.sources._
+    import org.apache.spark.sql.catalyst.{expressions => cx}
     f match {
       case EqualTo(a, v) => Some(col(a) === lit(v))
       case EqualNullSafe(a, v) => Some(col(a) <=> lit(v))
@@ -1784,7 +1785,9 @@ object GraftFilters {
       case GreaterThanOrEqual(a, v) => Some(col(a) >= lit(v))
       case LessThan(a, v) => Some(col(a) < lit(v))
       case LessThanOrEqual(a, v) => Some(col(a) <= lit(v))
-      case In(a, vs) => Some(col(a).isin(vs.toIndexedSeq: _*))
+      // not `isin`, which records a call site per value (10^5 at runtime)
+      case In(a, vs) => Some(Glue.column(cx.In(
+        Glue.resolvableExpression(col(a)), vs.toSeq.map(cx.Literal(_)))))
       case IsNull(a) => Some(col(a).isNull)
       case IsNotNull(a) => Some(col(a).isNotNull)
       case StringStartsWith(a, v) => Some(col(a).startsWith(v))

@@ -3,22 +3,25 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.time.{Instant, LocalDate}
 
-import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.api._
 import graft.api.Manifest.FileEntry
 
 /** Keep-conservative property of the one file planner (`Table.planFiles`):
   * over random predicates, every file that holds a row satisfying the
-  * predicate is kept. Each file's real rows are the oracle. Columns are
-  * long, string, date and timestamp; literals come in every Java form
-  * `lit()` turns into Catalyst's internal ones (Int/Long/Double/BigDecimal,
-  * String, LocalDate/java.sql.Date, Instant/java.sql.Timestamp); the
-  * layouts are a bucketed table whose files also carry rename maps and an
-  * unbucketed one with a rename and a drop + re-add. */
+  * predicate is kept. Each file's real rows are the oracle, filtered by
+  * Spark itself, so cross-type comparisons follow Spark's own casts.
+  * Columns are long, string, date and timestamp; literals come in every
+  * Java form `lit()` turns into Catalyst's internal ones
+  * (Int/Long/Double/BigDecimal, String, LocalDate/java.sql.Date,
+  * Instant/java.sql.Timestamp). The layouts are a bucketed table whose
+  * files also carry rename maps, an unbucketed one with a rename and a drop
+  * + re-add, and two whose string column holds integer text ("044", " 44")
+  * compared with numbers as well as strings: one bucketed on that column,
+  * one unbucketed with tight per-file zone maps on it. */
 class FilePlanSpec extends SparkSpec {
 
   private val schema = StructType(Seq(
@@ -28,11 +31,7 @@ class FilePlanSpec extends SparkSpec {
   private val Day0 = 19000L
   private val Sec0 = 1700000000L
 
-  /** One row, normalized for comparison: numbers as BigDecimal, dates as
-    * epoch days, timestamps as epoch micros; None is NULL. */
-  private type Vals = Map[String, Option[Any]]
-
-  // predicate AST mirrored between a Column and SQL three-valued evaluation
+  // predicate AST, turned into a Column
   private sealed trait P
   private case class Cmp(c: String, op: String, v: Any, flipped: Boolean) extends P
   private case class InP(c: String, vs: Seq[Any]) extends P
@@ -55,56 +54,28 @@ class FilePlanSpec extends SparkSpec {
     case OrP(l, r) => toColumn(l) || toColumn(r)
   }
 
-  private def norm(v: Any): Any = v match {
-    case n @ (_: java.lang.Integer | _: java.lang.Long | _: java.lang.Double |
-              _: java.math.BigDecimal) => new java.math.BigDecimal(n.toString)
-    case s: String => UTF8String.fromString(s)
-    case d: LocalDate => d.toEpochDay
-    case d: java.sql.Date => d.toLocalDate.toEpochDay
-    case i: Instant => i.getEpochSecond * 1000000L + i.getNano / 1000
-    case t: java.sql.Timestamp => norm(t.toInstant)
-  }
+  /** The string of row `k`: `n044` text, or (`numText`) integer text in
+    * one of four spellings Spark casts back to 44 alike. */
+  private def text(k: Long, numText: Boolean): String =
+    if (!numText) f"n$k%03d"
+    else (k % 4) match {
+      case 0 => f"$k%03d"; case 1 => s"$k"; case 2 => s" $k"; case _ => s"$k "
+    }
 
-  private def compare(a: Any, b: Any): Int = (a, b) match {
-    case (x: java.math.BigDecimal, y: java.math.BigDecimal) => x.compareTo(y)
-    case (x: UTF8String, y: UTF8String) => x.compareTo(y)
-    case (x: Long, y: Long) => java.lang.Long.compare(x, y)
-  }
-
-  private def eval(p: P, row: Vals): Option[Boolean] = p match {
-    case Cmp(c, op, v, _) => row(c).map { x =>
-      val r = compare(x, norm(v))
-      op match {
-        case "=" => r == 0; case ">" => r > 0; case ">=" => r >= 0
-        case "<" => r < 0; case "<=" => r <= 0
-      }
-    }
-    case InP(c, vs) => row(c).flatMap { x =>
-      if (vs.exists(v => v != null && compare(x, norm(v)) == 0)) Some(true)
-      else if (vs.contains(null)) None else Some(false)
-    }
-    case AndP(l, r) => (eval(l, row), eval(r, row)) match {
-      case (Some(false), _) | (_, Some(false)) => Some(false)
-      case (Some(true), Some(true)) => Some(true)
-      case _ => None
-    }
-    case OrP(l, r) => (eval(l, row), eval(r, row)) match {
-      case (Some(true), _) | (_, Some(true)) => Some(true)
-      case (Some(false), Some(false)) => Some(false)
-      case _ => None
-    }
-  }
-
-  private def value(rnd: scala.util.Random, c: String, n: Int): Any = {
+  /** A literal for column `c` in the Java form `kind` picks; a numeric
+    * text column gets numbers as well as strings. */
+  private def value(rnd: scala.util.Random, c: String, n: Int, kind: Int,
+                    numText: Boolean): Any = {
     val x = rnd.nextInt(n + 10) - 5
-    (c, rnd.nextInt(2)) match {
-      case ("k", _) => rnd.nextInt(4) match {
+    (c, kind % 2) match {
+      case ("k", _) => kind match {
         case 0 => x.toLong
         case 1 => Integer.valueOf(x)
         case 2 => x + (if (rnd.nextBoolean()) 0.5 else 0.0)
         case _ => new java.math.BigDecimal(s"$x.${rnd.nextInt(2) * 5}")
       }
-      case ("name", _) => f"n$x%03d"
+      case ("name", _) if numText && kind > 0 => value(rnd, "k", n, kind, numText)
+      case ("name", _) => text(x, numText)
       case ("d", 0) => LocalDate.ofEpochDay(Day0 + x)
       case ("d", _) => java.sql.Date.valueOf(LocalDate.ofEpochDay(Day0 + x))
       case ("t", b) =>
@@ -113,31 +84,32 @@ class FilePlanSpec extends SparkSpec {
     }
   }
 
-  private def gen(rnd: scala.util.Random, n: Int, depth: Int): P = {
+  private def gen(rnd: scala.util.Random, n: Int, depth: Int, numText: Boolean): P = {
     if (depth > 0 && rnd.nextInt(3) == 0) {
-      if (rnd.nextBoolean()) AndP(gen(rnd, n, depth - 1), gen(rnd, n, depth - 1))
-      else OrP(gen(rnd, n, depth - 1), gen(rnd, n, depth - 1))
+      val (l, r) = (gen(rnd, n, depth - 1, numText), gen(rnd, n, depth - 1, numText))
+      if (rnd.nextBoolean()) AndP(l, r) else OrP(l, r)
     } else {
       val c = Seq("k", "name", "d", "t")(rnd.nextInt(4))
+      val kind = rnd.nextInt(4) // one Java form per leaf, so an IN is uniform
       if (rnd.nextInt(3) == 0)
         InP(c, Seq.fill(1 + rnd.nextInt(4))(
-          if (rnd.nextInt(6) == 0) null else value(rnd, c, n)))
+          if (rnd.nextInt(6) == 0) null else value(rnd, c, n, kind, numText)))
       else Cmp(c, Seq("=", ">", ">=", "<", "<=")(rnd.nextInt(5)),
-        value(rnd, c, n), rnd.nextInt(4) == 0)
+        value(rnd, c, n, kind, numText), rnd.nextInt(4) == 0)
     }
   }
 
   /** Single-file inserts: file `i` holds k in [i*10, i*10+9] (some NULLs),
     * every other column derived from k, so each column's zone maps are
     * tight per file. */
-  private def insertFiles(t: Table, from: Int, until: Int,
-                          rnd: scala.util.Random, sName: String): Unit =
+  private def insertFiles(t: Table, from: Int, until: Int, rnd: scala.util.Random,
+                          sName: String, numText: Boolean = false): Unit =
     (from until until).foreach { i =>
       val rows = new java.util.ArrayList[Row]()
       (0 until 10).foreach { j =>
         val k = i * 10L + j
         def orNull(v: Any) = if (k != 10 && rnd.nextInt(8) == 0) null else v
-        rows.add(Row(orNull(k), orNull(f"n$k%03d"),
+        rows.add(Row(orNull(k), orNull(text(k, numText)),
           orNull(java.sql.Date.valueOf(LocalDate.ofEpochDay(Day0 + k))),
           orNull(java.sql.Timestamp.from(Instant.ofEpochSecond(Sec0 + k * 60L)))))
       }
@@ -146,34 +118,31 @@ class FilePlanSpec extends SparkSpec {
       t.insert(spark.createDataFrame(rows, sch).coalesce(1))
     }
 
-  /** Every file's rows, read under the file's own rename map. */
-  private def fileRows(tdir: java.nio.file.Path, m: Manifest.TableManifest)
-      : Seq[(FileEntry, Seq[Vals])] = m.files.map { f =>
-    val logical = m.schema
-    val phys = StructType(logical.fields.map(x => x.copy(name = f.physicalName(x.name))))
-    val rows = spark.read.schema(phys).parquet(Table.resolvePath(tdir, f.path))
-      .collect().toSeq.map { r =>
-        logical.fieldNames.zipWithIndex.map { case (n, i) =>
-          n -> Option(r.get(i)).map(norm)
-        }.toMap
-      }
-    (f, rows)
+  /** Every file's rows, read under the file's own rename map and tagged
+    * with the file's path in `__f`, as one local relation (a filter over it
+    * is evaluated on the driver, with no job). */
+  private def fileRows(tdir: java.nio.file.Path, m: Manifest.TableManifest): DataFrame = {
+    val all = m.files.map { f =>
+      val phys = StructType(m.schema.fields.map(x => x.copy(name = f.physicalName(x.name))))
+      spark.read.schema(phys).parquet(Table.resolvePath(tdir, f.path))
+        .toDF(m.schema.fieldNames: _*).withColumn("__f", lit(f.path))
+    }.reduce(_ union _)
+    spark.createDataFrame(all.collectAsList(), all.schema)
   }
 
   private def checkKeepsMatches(tdir: java.nio.file.Path, m: Manifest.TableManifest,
-                                seed: Int): (Int, Int) = {
-    val files = fileRows(tdir, m)
-    val n = files.flatMap(_._2).flatMap(_("k")).size
+                                seed: Int, numText: Boolean = false): (Int, Int) = {
+    val rows = fileRows(tdir, m)
+    val n = rows.where(col("k").isNotNull).collect().length
     val rnd = new scala.util.Random(seed)
     var (kept, total) = (0, 0)
     (1 to 300).foreach { _ =>
-      val p = gen(rnd, n, depth = 2)
+      val p = gen(rnd, n, depth = 2, numText)
       val planned = Table.planFiles(m, toColumn(p)).map(_.path).toSet
-      files.foreach { case (f, rows) =>
-        if (rows.exists(r => eval(p, r).contains(true)))
-          assert(planned(f.path), s"$p: dropped ${f.path}, which holds a matching row")
-      }
-      kept += planned.size; total += files.size
+      val matching = rows.where(toColumn(p)).select("__f").collect().map(_.getString(0)).toSet
+      matching.foreach(f =>
+        assert(planned(f), s"$p: dropped $f, which holds a matching row"))
+      kept += planned.size; total += m.files.size
     }
     (kept, total)
   }
@@ -224,20 +193,42 @@ class FilePlanSpec extends SparkSpec {
       }
     }
 
+    // integer text in the string column: bucketed on it, and unbucketed
+    // with tight per-file zone maps on it
+    val textSchema = StructType(schema.fields.map(f =>
+      if (f.name == "s") f.copy(name = "name") else f))
     s.transaction { tx =>
-      for ((name, seed) <- Seq("bk" -> 1, "rn" -> 2)) {
+      insertFiles(tx.bucket("b").schema("m").createTable("bs", textSchema),
+        0, 8, rnd, "name", numText = true)
+      insertFiles(tx.bucket("b").schema("m").createTable("ts", textSchema),
+        0, 8, rnd, "name", numText = true)
+    }
+    s.transaction { tx =>
+      val t = tx.bucket("b").schema("m").table("bs")
+      t.addBucketLayout(4, Seq("name"))
+      t.optimizeBuckets(10)
+    }
+
+    s.transaction { tx =>
+      for ((name, seed) <- Seq("bk" -> 1, "rn" -> 2, "bs" -> 3, "ts" -> 4)) {
         val t = tx.bucket("b").schema("m").table(name)
         val m = t.manifest
         val tdir = Paths.get(root, "b", "m", name)
-        if (name == "bk") {
-          assert(m.files.size >= 8 && m.files.forall(f => f.bucket >= 0 && f.renames.nonEmpty),
+        name match {
+          case "bk" => assert(m.files.size >= 8 &&
+            m.files.forall(f => f.bucket >= 0 && f.renames.nonEmpty),
             s"bucketed layout drifted: ${m.files.map(f => (f.bucket, f.renames))}")
-        } else assert(m.files.count(_.renames.nonEmpty) == 4, "rename layout drifted")
-        val (kept, total) = checkKeepsMatches(tdir, m, seed)
-        // not vacuous: the planner prunes on both layouts (hash buckets
+          case "rn" => assert(m.files.count(_.renames.nonEmpty) == 4, "rename layout drifted")
+          case "bs" => assert(m.files.size >= 8 && m.files.forall(_.bucket >= 0),
+            s"bucketed layout drifted: ${m.files.map(_.bucket)}")
+          case _ => assert(m.files.size == 8, "text layout drifted")
+        }
+        val (kept, total) = checkKeepsMatches(tdir, m, seed,
+          numText = name == "bs" || name == "ts")
+        // not vacuous: the planner prunes on every layout (hash buckets
         // spread every column's range over all files, so only point
-        // lookups on k prune there)
-        val bound = if (name == "bk") total * 9 / 10 else total * 3 / 4
+        // lookups on the bucket key prune there)
+        val bound = if (name.startsWith("b")) total * 9 / 10 else total * 3 / 4
         assert(kept < bound, s"$name: planner kept $kept of $total files")
       }
       // a fractional bound on a long column is compared exactly, never
@@ -248,6 +239,18 @@ class FilePlanSpec extends SparkSpec {
       for (c <- Seq(col("k") < 10.5, col("k") > 9.5, col("k") < new java.math.BigDecimal("10.5"),
                     col("k") <= lit(10.0f), col("k").between(9.5, 10.5)))
         assert(Table.planFiles(rn, c).contains(holds10.head), s"$c dropped the file holding k = 10")
+      // a number against a string column compares by casting the column
+      // (" 10" = 10), so neither the number's hash bucket nor its string
+      // order may prune a file
+      for (name <- Seq("bs", "ts");
+           c <- Seq(col("name") === 10, col("name").isin(10, 11), col("name") > 9.5)) {
+        val m = tx.bucket("b").schema("m").table(name).manifest
+        val matching = fileRows(Paths.get(root, "b", "m", name), m).where(c)
+          .select("__f").collect().map(_.getString(0)).toSet
+        val planned = Table.planFiles(m, c).map(_.path).toSet
+        assert(matching.nonEmpty && matching.subsetOf(planned),
+          s"$name: $c planned $planned, rows sit in $matching")
+      }
       // the bucketed table prunes point lookups by bucket although its
       // zone maps on k span every file
       val bk = tx.bucket("b").schema("m").table("bk").manifest
@@ -259,6 +262,11 @@ class FilePlanSpec extends SparkSpec {
       // an IN of only NULLs matches nothing; an `=` NULL prunes nothing
       assert(Table.planFiles(bk, col("k").isin(null)).isEmpty)
       assert(Table.planFiles(bk, col("k") === lit(null)).size == bk.files.size)
+      // a runtime IN with no keys (an empty join build side) matches nothing
+      val noKeys = org.apache.spark.sql.graftglue.GraftFilters
+        .filterToColumn(org.apache.spark.sql.sources.In("k", Array.empty[Any])).get
+      assert(Table.planFiles(bk, noKeys).isEmpty)
+      assert(Table.planFiles(rn, noKeys).size == rn.files.size)
     }
   }
 }
